@@ -27,6 +27,21 @@ object ClusterBench {
     * methods). */
   private val coresPerExec = sys.env.getOrElse("SPARK_GRAFT_EXEC_CORES", "1").toInt
 
+  /** Host-level stall attribution (VM co-tenancy evidence): the
+    * /proc/stat `cpu` line's fields — user nice system idle iowait irq
+    * softirq steal ... — in jiffies summed over all host CPUs (100 Hz per
+    * CPU); zeros when unreadable. Steal is the hypervisor taking our vCPU:
+    * a slow pass WITH a big steal delta is external, one WITHOUT is the
+    * app's to explain. */
+  def cpuStat(): Array[Long] = {
+    try {
+      val l = scala.io.Source.fromFile("/proc/stat").getLines().next()
+      l.split("\\s+").drop(1).map(_.toLong)
+    } catch { case _: Throwable => Array.fill(10)(0L) }
+  }
+  /** Index of the steal field in [[cpuStat]]. */
+  val Steal = 7
+
   private def session(workers: Int, memMb: Int): SparkSession = {
     val jar = new java.io.File(
       "target/scala-2.13/sourcesystemdatacheckerspark_2.13-0.1.0.jar").getAbsolutePath
@@ -118,71 +133,14 @@ object ClusterBench {
     val snapshotId = store.currentSnapshotId("clips").get
     val cfg = EngineConfig(fullDecodeVerify = profile == "full")
 
-    // Host-level stall attribution per pass (VM co-tenancy evidence): the
-    // /proc/stat cpu line gives steal (hypervisor took our vCPU), iowait
-    // and idle jiffies; a slow pass WITH a big steal delta is external, a
-    // slow pass WITHOUT one is the app's to explain. Units: jiffies summed
-    // over all host CPUs (100 Hz per CPU).
-    def cpuStat(): Array[Long] = {
-      try {
-        val l = scala.io.Source.fromFile("/proc/stat").getLines().next()
-        l.split("\\s+").drop(1).map(_.toLong)
-      } catch { case _: Throwable => Array.fill(10)(0L) }
-    }
     def loadAvg(): String = {
       try scala.io.Source.fromFile("/proc/loadavg").getLines().next().split(" ").head
       catch { case _: Throwable => "-1" }
     }
-    // SPARK_GRAFT_STAGEDUMP=1: per-stage task-time/GC breakdown on stderr —
-    // the diagnostic view for "where does W8 burn 2x the task CPU of W2"
-    if (sys.env.get("SPARK_GRAFT_STAGEDUMP").contains("1")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        // Job timeline: `gap` is wall time from the previous job's end to
-        // this job's submission — the DRIVER-SERIAL term (planning, collect
-        // processing, commit protocol) that caps scaling efficiency. The
-        // sum of gaps + sum of (dur of jobs whose stages have ≲cores tasks)
-        // is the measured S in T(W) = S + P/cores(W).
-        private val epochNs = System.nanoTime()
-        @volatile private var lastJobEndNs = epochNs
-        private val jobSubmitNs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val now = System.nanoTime()
-          jobSubmitNs.put(e.jobId, now)
-          val what = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))
-              .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
-          System.err.println(f"[job] id=${e.jobId}%4d start=+${(now - epochNs) / 1e9}%8.2fs " +
-            f"gap=${math.max(0L, now - lastJobEndNs) / 1e9}%6.3fs stages=${e.stageIds.size}%d " +
-            f"what=$what%s")
-        }
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val now = System.nanoTime()
-          lastJobEndNs = now
-          val dur = Option(jobSubmitNs.remove(e.jobId)).map(s => (now - s) / 1e9).getOrElse(-1.0)
-          System.err.println(f"[job] id=${e.jobId}%4d end=+${(now - epochNs) / 1e9}%8.2fs dur=$dur%6.3fs")
-        }
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo; val m = si.taskMetrics
-          System.err.println(f"[stg] id=${si.stageId}%4d tasks=${si.numTasks}%-4d " +
-            f"run=${m.executorRunTime / 1000.0}%8.1fcs gc=${m.jvmGCTime / 1000.0}%6.1fcs " +
-            f"cpu=${m.executorCpuTime / 1e9}%8.1fcs deser=${m.executorDeserializeTime / 1000.0}%6.1fcs " +
-            f"sRead=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.1fMB " +
-            f"fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1000.0}%6.1fcs " +
-            f"sWrite=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fMB " +
-            f"wWait=${m.shuffleWriteMetrics.writeTime / 1e9}%6.1fcs " +
-            f"in=${m.inputMetrics.bytesRead / 1e6}%8.1fMB spill=${m.diskBytesSpilled / 1e6}%6.1fMB")
-        }
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics; val ti = e.taskInfo
-          if (m != null && m.executorRunTime > 200)
-            System.err.println(f"[tsk] stg=${e.stageId}%4d exec=${ti.executorId}%-3s " +
-              f"run=${m.executorRunTime}%6dms cpu=${m.executorCpuTime / 1000000}%6dms " +
-              f"gc=${m.jvmGCTime}%5dms sw=${m.shuffleWriteMetrics.writeTime / 1000000}%6dms " +
-              f"swB=${m.shuffleWriteMetrics.bytesWritten / 1048576}%5dMB")
-        }
-      })
-    }
+    // SPARK_GRAFT_STAGEDUMP=1: the per-job/stage timeline on stderr — the
+    // diagnostic view for "where does W8 burn 2x the task CPU of W2"
+    if (sys.env.get("SPARK_GRAFT_STAGEDUMP").contains("1"))
+      JobTimeline.attach(spark.sparkContext, Some(System.err))
     // Optional JIT warmup against a SMALL corpus before the measured
     // passes: whole-stage codegen sources are cached by plan shape, not
     // data size, so one pass over a 100k-row store compiles the exact same
@@ -206,7 +164,8 @@ object ClusterBench {
       val t0 = System.nanoTime()
       new CheckpointedRunner(wstore, wout).runResumable(spark, wsid, Rule.standardPack, cfg).count()
       val t = (System.nanoTime() - t0) / 1e9
-      val stealJ = { val s1 = cpuStat(); if (s0.length > 7 && s1.length > 7) s1(7) - s0(7) else -1L }
+      val s1 = cpuStat()
+      val stealJ = if (s0.length > Steal && s1.length > Steal) s1(Steal) - s0(Steal) else -1L
       System.err.println(f"[ClusterBench] warmup pass on $wd: $t%.1fs steal_j=$stealJ")
       sys.env.get("SPARK_GRAFT_ABORT_STEAL_J").map(_.toLong).filter(stealJ > _).foreach { th =>
         println(s"""{"workers":$workers,"n":$n,"profile":"$profile","aborted":"warmup_steal","warmup_s":${f"$t%.1f"},"warmup_steal_j":$stealJ,"threshold_j":$th}""")
@@ -242,8 +201,7 @@ object ClusterBench {
       val c1 = candle()
       val s1 = cpuStat()
       def d(i: Int) = if (s0.length > i && s1.length > i) s1(i) - s0(i) else -1L
-      // /proc/stat cpu fields: user nice system idle iowait irq softirq steal
-      val stat = s"""{"t":${f"$t%.1f"},"steal_j":${d(7)},"iowait_j":${d(4)},""" +
+      val stat = s"""{"t":${f"$t%.1f"},"steal_j":${d(Steal)},"iowait_j":${d(4)},""" +
         s""""idle_j":${d(3)},"busy_j":${d(0) + d(1) + d(2)},"load0":$l0,"load1":${loadAvg()},""" +
         s""""candle_pre_s":${f"$c0%.2f"},"candle_post_s":${f"$c1%.2f"}}"""
       (t, stat)

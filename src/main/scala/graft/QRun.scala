@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run selected contract queries against an sf dir, print
-  * wall time + row count (+ optional formatted plan with -explain).
+  * wall time + row count (+ optional formatted plan with -explain, and the
+  * JobTimeline's per-job/stage breakdown with -jobs; `-jobs
+  * q28_clips_verdicts` is the engine run's stage profile).
   *
-  * Usage: graft.QRun <sfDir> [-explain] q15_dedup_tokenset q16_ngram_jaccard ...
+  * Usage: graft.QRun <sfDir> [-explain] [-jobs] q15_dedup_tokenset q16_ngram_jaccard ...
   */
 object QRun {
   def main(args: Array[String]): Unit = {
@@ -22,48 +24,22 @@ object QRun {
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIR", "/dev/shm/spark-local"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val verbose = args.contains("-jobs")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        t0.put(j.jobId, System.nanoTime())
-        if (verbose) {
-          val d = Option(j.properties).map(_.getProperty("spark.job.description")).getOrElse("")
-          println(f"[job-start] ${j.jobId}%3d stages=${j.stageIds.size} ${String.valueOf(d).take(110)}")
-        }
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (verbose) {
-          val ms = (System.nanoTime() - t0.getOrDefault(j.jobId, System.nanoTime())) / 1e6
-          println(f"[job-end]   ${j.jobId}%3d ${ms}%8.0f ms")
-        }
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        if (verbose) {
-          val si = s.stageInfo
-          val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-          val run = si.taskMetrics.executorRunTime / 1000.0
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%-4d wall=$dur%6.2fs cpu=$run%7.2fs ${si.name.take(80)}")
-        }
-      }
-    })
+    val timeline = JobTimeline.attach(spark.sparkContext,
+      if (args.contains("-jobs")) Some(System.out) else None)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // mirror Bench's draw semantics for the engine queries: drop the
       // memoized report so a repeated q28 actually re-runs the engine
       // (warm-JVM draws are otherwise memo reads and time nothing)
       if (name == "q28_clips_verdicts") SparkEntry.releaseReport(sfDir)
-      val j0 = jobs.get(); val s0 = stages.get()
+      val j0 = timeline.jobs; val s0 = timeline.stages
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       if (explain) df.explain("formatted")
       val n = df.count()
       val w = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graft.ListenerBusFlush.flush(spark.sparkContext)
-      println(f"[qrun] $name rows=$n wall=$w%.2fs jobs=${jobs.get() - j0} stages=${stages.get() - s0}")
+      println(f"[qrun] $name rows=$n wall=$w%.2fs jobs=${timeline.jobs - j0} stages=${timeline.stages - s0}")
     }
     spark.stop()
   }

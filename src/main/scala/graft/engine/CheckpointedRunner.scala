@@ -163,22 +163,18 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
     val stamp = (df: DataFrame) => df
       .withColumn("snapshot_id", lit(snapshotId)).withColumn("run_id", lit(runId))
     // phase tags on the jobs each step submits (visible in the UI/history
-    // and in ClusterBench's [job] timeline — the serial-term attribution)
-    def phase[T](name: String)(body: => T): T = {
-      val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-      spark.sparkContext.setJobDescription(s"graft:$name")
-      try body finally spark.sparkContext.setJobDescription(prev)
-    }
+    // and in the JobTimeline — the serial-term attribution)
+    val sc = spark.sparkContext
     val (report, m) = MetricsListener.capture(spark, Some(runId)) {
-      val baselineStats = phase("baseline-stats") {
+      val baselineStats = JobScope(sc, "baseline-stats") {
         baselineStatsFor(spark, effRules.collect { case d: Drift => d }, cfg0)
       }
-      val rep = phase("evaluate") {
+      val rep = JobScope(sc, "evaluate") {
         ValidationEngine.run(spark, pending, transcripts,
           store.read(spark, "baseline_clips"), effRules, cfg0, baselineStats)
       }
-      phase("append-violations") { outStore.append(ViolationsTable, stamp(rep.violations)) }
-      phase("append-verdicts") { outStore.append(VerdictsTable, stamp(rep.verdicts)) }
+      JobScope(sc, "append-violations") { outStore.append(ViolationsTable, stamp(rep.violations)) }
+      JobScope(sc, "append-verdicts") { outStore.append(VerdictsTable, stamp(rep.verdicts)) }
       rep
     }
     val wallMs = (System.nanoTime() - t0) / 1000000L
@@ -196,7 +192,7 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
         lit(m.shuffleWriteBytes).as("shuffle_write_bytes"),
         lit(m.executorRunTimeMs).as("executor_run_ms"),
         lit(m.spilledBytes).as("spilled_bytes"))
-    phase("append-lineage") { outStore.append(LineageTable, lineage) }
+    JobScope(sc, "append-lineage") { outStore.append(LineageTable, lineage) }
     report.unpersist()
     outStore.read(spark, LineageTable).filter(col("snapshot_id") === snapshotId)
   }

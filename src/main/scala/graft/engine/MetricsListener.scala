@@ -64,33 +64,20 @@ object MetricsListener {
     * group for the duration of `body` (Spark propagates the tag to
     * AQE-stage and broadcast-build jobs via captured local properties), and
     * the listener counts ONLY that group's tasks — concurrent runs on the
-    * same session no longer pollute each other's lineage metrics. The
+    * same session no longer pollute each other's lineage metrics; the
+    * caller's own group and description are back in place on return. The
     * listener bus is drained before the snapshot so late task-end events
     * are counted. */
   def capture[T](spark: SparkSession, jobGroup: Option[String] = None)(body: => T): (T, RunMetrics) = {
     val l = new MetricsListener(jobGroup)
     val sc = spark.sparkContext
-    // save/restore the caller's group (not clearJobGroup): capture may run
-    // inside a caller that set its own group, and clobbering it would
-    // mis-scope every job the caller submits after capture returns
-    val prevGroup = Option(sc.getLocalProperty("spark.jobGroup.id"))
-    val prevDesc = Option(sc.getLocalProperty("spark.job.description"))
-    val prevInterrupt = Option(sc.getLocalProperty("spark.job.interruptOnCancel"))
-    sc.addSparkListener(l)
-    jobGroup.foreach(g => sc.setJobGroup(g, s"graft run $g", false))
-    try {
+    def measured: (T, RunMetrics) = {
       val r = body
       org.apache.spark.graft.ListenerBusFlush.flush(sc)
       (r, l.snapshot)
-    } finally {
-      jobGroup.foreach { _ =>
-        prevGroup match {
-          case Some(g) =>
-            sc.setJobGroup(g, prevDesc.orNull, prevInterrupt.exists(_.toBoolean))
-          case None => sc.clearJobGroup()
-        }
-      }
-      sc.removeSparkListener(l)
     }
+    sc.addSparkListener(l)
+    try jobGroup.fold(measured)(g => JobScope.inGroup(sc, g)(measured))
+    finally sc.removeSparkListener(l)
   }
 }

@@ -548,32 +548,20 @@ object ValidationEngine {
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    // job-group tag does not cross into pooled threads on its own — re-tag
-    // so a CheckpointedRunner's per-run metrics still see the pcm jobs
-    val jobGroup = Option(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
-    def tagged[T](descr: String)(body: => T): T = {
-      val prevDesc = spark.sparkContext.getLocalProperty("spark.job.description")
-      jobGroup.foreach(g => spark.sparkContext.setJobGroup(g, s"graft run $g", false))
-      spark.sparkContext.setJobDescription(descr)
-      try body
-      finally {
-        jobGroup.foreach(_ => spark.sparkContext.clearJobGroup())
-        spark.sparkContext.setJobDescription(prevDesc)
-      }
-    }
+    // the job group does not cross into pooled threads on its own — scopes
+    // opened there carry it, so a CheckpointedRunner's per-run metrics
+    // still see the pooled jobs
+    val sc = spark.sparkContext
+    val jobGroup = JobScope.group(sc)
     // both single-scan materializations run in parallel (baseline on a
     // pooled thread, clips on this one) BEFORE the branch fan-out: the pcm
     // future and the meta chain would otherwise race the cold caches and
     // compute the scans twice
     val baseScanF: Future[Unit] = hashedBase match {
       case None => Future.successful(())
-      case Some(b) => Future { tagged("graft:baseline-hash-scan") { b.count(); () } }
+      case Some(b) => Future { JobScope(sc, "baseline-hash-scan", jobGroup) { b.count(); () } }
     }
-    payloadHash.foreach { hm =>
-      val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-      spark.sparkContext.setJobDescription("graft:payload-hash-scan")
-      try hm.count() finally spark.sparkContext.setJobDescription(prev)
-    }
+    payloadHash.foreach(hm => JobScope(sc, "payload-hash-scan") { hm.count() })
 
     // ---- the pcm branch reads ONLY the shared payload-hash frames (or, in
     // full-decode mode, the raw clips) + baseline tables — nothing it needs
@@ -595,18 +583,7 @@ object ValidationEngine {
         // the baseline-hash cache must be fully populated before any action
         // touches plans containing it (cold-cache race, as above)
         Await.result(baseScanF, scala.concurrent.duration.Duration.Inf)
-        // the tag lives in the pooled thread's local properties, and global
-        // ExecutionContext threads are REUSED — clear in finally (job group
-        // AND description) or a later caller's action on this thread
-        // inherits a stale label
-        val prevDesc = spark.sparkContext.getLocalProperty("spark.job.description")
-        jobGroup.foreach(g => spark.sparkContext.setJobGroup(g, s"graft run $g", false))
-        spark.sparkContext.setJobDescription("graft:pcm-counts")
-        try branchCounts(u)
-        finally {
-          jobGroup.foreach(_ => spark.sparkContext.clearJobGroup())
-          spark.sparkContext.setJobDescription(prevDesc)
-        }
+        JobScope(sc, "pcm-counts", jobGroup) { branchCounts(u) }
       }
     }
 
@@ -620,12 +597,8 @@ object ValidationEngine {
     // the stats cache, and its rows are needed driver-side anyway (verdict
     // thresholds + the partition-value ordinal domain). Replaces the
     // separate count() populate job of earlier rounds.
-    val statsByPv: Map[String, org.apache.spark.sql.Row] = {
-      val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-      spark.sparkContext.setJobDescription("graft:stats-collect")
-      try stats.collect().map(r => r.getAs[String](PV) -> r).toMap
-      finally spark.sparkContext.setJobDescription(prev)
-    }
+    val statsByPv: Map[String, org.apache.spark.sql.Row] =
+      JobScope(sc, "stats-collect") { stats.collect().map(r => r.getAs[String](PV) -> r).toMap }
     // lexicographic ranks over the (metadata-scale) partition-value domain;
     // lets min-PV attribution run as a fixed-width min(ordinal) aggregate
     val pvOrdinals: Map[String, Int] =
@@ -697,7 +670,7 @@ object ValidationEngine {
       // distinct). Each count also populates its branch's cache, so the
       // caller's violations output replays no rule work.
       val fs = metaBranchesP.map(b => Future {
-        tagged("graft:meta-counts") { branchCounts(b) }
+        JobScope(sc, "meta-counts", jobGroup) { branchCounts(b) }
       })
       fs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
         .flatMap(_.toSeq).groupMapReduce(_._1)(_._2)(_ + _)

@@ -86,11 +86,6 @@ object KllSketchAgg {
     else KolmogorovSmirnov.computeKSDelta(sa, sb)
   }
 
-  /** Statistically-justified KS threshold at significance `p` for the two
-    * sketches' accuracies (DataSketches' own criterion). */
-  def ksThreshold(a: Array[Byte], b: Array[Byte], p: Double): Double =
-    KolmogorovSmirnov.computeKSThreshold(fromBytes(a), fromBytes(b), p)
-
   def quantile(bytes: Array[Byte], q: Double): Double = {
     val s = fromBytes(bytes)
     if (s.isEmpty) Double.NaN

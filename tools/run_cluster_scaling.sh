@@ -5,7 +5,7 @@
 # executors. Single-JVM local[N] cannot measure this (shared-JIT recompile
 # storms + futex contention made 4x threads run SLOWER; BENCH/BASELINE.md).
 #
-# Methodology (carried over from tools/run_scaling.sh, measured on this VM):
+# Methodology (carried over from the single-JVM local[N] cells, measured on this VM):
 #  - corpus + shuffle dirs on /dev/shm (virtio disk inflates wall ~5x);
 #  - run DETACHED (tmux/nohup): foreground supervision skews wall up to 3x;
 #  - fresh app per cell, cold pass + ONE measured steady pass (pass 2):
