@@ -35,10 +35,22 @@ object SparkEntry {
   private val reportMemo =
     new java.util.concurrent.ConcurrentHashMap[String, graft.engine.ValidationReport]()
 
-  /** Corpus root shared by the engine queries and the DuckDB oracle — both
-    * read the SAME materialized parquet. */
-  def corpusDir(dir: String): String =
-    s"/root/repo/target/oracle/${new java.io.File(dir).getName}"
+  /** Root of the materialized synthetic corpora: `target/oracle` in the
+    * checkout these classes were loaded from (the nearest ancestor of their
+    * class directory or jar that holds a `build.sbt`), else under the
+    * working directory. */
+  val CorpusRoot: String = {
+    import java.nio.file.{Files, Paths}
+    val here = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(here)(_.getParent).takeWhile(_ != null)
+      .find(d => Files.exists(d.resolve("build.sbt")))
+      .getOrElse(Paths.get("").toAbsolutePath)
+      .resolve("target/oracle").toString
+  }
+
+  /** Corpus of the sf directory `dir`, shared by the engine queries and the
+    * DuckDB oracle — both read the SAME materialized parquet. */
+  def corpusDir(dir: String): String = s"$CorpusRoot/${new java.io.File(dir).getName}"
 
   /** One-time input materialization (idempotent; marker-keyed). Bench and
     * Verify call this OUTSIDE the per-query timing: at production scale the
@@ -547,7 +559,7 @@ object SparkEntry {
   /** Root of the materialized synthetic corpus the q28/q29 oracles read
     * (written by Verify via ClipSynth.writeAll; the driver's correctness
     * pass runs at sf0.01 per TESTDATA.md). */
-  private val OracleCorpus = "/root/repo/target/oracle/sf0.01"
+  private val OracleCorpus = corpusDir("sf0.01")
 
   /** Shared CTE block reconstructing the engine's violation stream in pure
     * SQL from the materialized clips/baseline/transcripts parquet:

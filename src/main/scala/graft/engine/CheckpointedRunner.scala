@@ -95,6 +95,25 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
     out.join(broadcast(committed), Seq("snapshot_id", "run_id"), "left_semi")
   }
 
+  /** `cfg` for a run over clips snapshot `snapshotId`, with
+    * `colocatedInputs` set when clustered storage (the Iceberg
+    * bucket-partition emulation) co-locates the diff join: the pinned clips
+    * snapshot and the baseline must BOTH be clustered on `clip_id`, the
+    * join key, with the SAME bucket count. Co-located, the payload diff
+    * join never moves the multi-KB payloads; at 10^12 rows a shuffle would
+    * re-move every one of them per run. Any other layout — a different
+    * bucket count (e.g. changed between corpus generations) or another
+    * clustering key — is NOT co-located on the join key, and flagging it
+    * would drop the shuffle_hash hint and let Catalyst plan a sort-merge
+    * join with an exchange + sort of the payload rows — exactly the
+    * pathology the hint exists to avoid. */
+  def configFor(snapshotId: Long, cfg: EngineConfig): EngineConfig =
+    (store.clusteringIfColocated("clips", Some(snapshotId)),
+        store.clusteringIfColocated("baseline_clips")) match {
+      case (Some(a @ ("clip_id", _)), Some(b)) if a == b => cfg.copy(colocatedInputs = true)
+      case _ => cfg
+    }
+
   /** Run `rules` over the pinned clips snapshot, skipping finished
     * partitions. Returns the lineage rows for the pinned snapshot (the
     * pre-existing rows on a no-op resume). */
@@ -106,28 +125,11 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
 
     val clips = store.read(spark, "clips", Some(snapshotId))
     val transcripts = store.read(spark, "transcripts")
-    // Clustered storage (Iceberg bucket-partition emulation): when the
-    // pinned clips snapshot and the baseline share a clip_id bucket layout,
-    // tell the engine so the payload diff join runs co-located instead of
-    // hinted onto a shuffle — at 10^12 rows that shuffle re-moves every
-    // multi-KB payload per run; co-located it never moves at all.
-    // BOTH sides must be clustered with the SAME (key, numBuckets): two
-    // tables bucketed with different specs (e.g. the bucket count changed
-    // between corpus generations) are NOT co-located, and flagging them so
-    // would drop the shuffle_hash hint and let Catalyst plan a sort-merge
-    // join with an exchange + sort of the multi-KB payload rows — exactly
-    // the pathology the hint exists to avoid.
-    val cfg0 = (store.clusteringIfColocated("clips", Some(snapshotId)),
-        store.clusteringIfColocated("baseline_clips")) match {
-      case (Some(a), Some(b)) if a == b => cfg.copy(colocatedInputs = true)
-      case _ => cfg
-    }
+    val cfg0 = configFor(snapshotId, cfg)
 
     val done = donePartitions(spark, snapshotId)
-    val pv = concat(lit(cfg.partitionCol + "="),
-      coalesce(col(cfg.partitionCol).cast("string"), lit("null")))
-
-    val pending = if (done.isEmpty) clips else clips.filter(!pv.isin(done.toSeq: _*))
+    val pending =
+      if (done.isEmpty) clips else clips.filter(!ValidationEngine.pvCol.isin(done.toSeq: _*))
 
     // The orphan (parent-without-child) direction of a Referential rule is
     // only well-defined against the FULL child table: running it over a

@@ -109,11 +109,6 @@ class SnapshotStore(root: String) {
     if (covered.lengthCompare(1) == 0) clusteringOf(table, covered.head) else None
   }
 
-  /** True when [[read]] at `snapshot` returns a bucketed (co-locatable)
-    * scan: the read covers exactly one snapshot and it was clustered. */
-  def isColocated(table: String, snapshot: Option[Long] = None): Boolean =
-    clusteringIfColocated(table, snapshot).isDefined
-
   private def claimSnapshot(table: String, tmp: java.nio.file.Path): Long = {
     var id = currentSnapshotId(table).getOrElse(-1L) + 1L
     var claimed = false
@@ -183,9 +178,10 @@ class SnapshotStore(root: String) {
     // former 32-bit String.hashCode could collide across the many store
     // roots one session sees (per-test temp dirs, warmup/out stores), and a
     // collision with matching table/snapshot would silently serve the other
-    // store's LOCATION
-    val rootDigest = java.security.MessageDigest.getInstance("MD5")
-      .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // store's LOCATION. SHA-256 truncated to 32 hex digits (MD5 is absent
+    // on FIPS-mode JVMs).
+    val rootDigest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(root.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
     val name = s"graft_bk_${rootDigest}_" +
       s"${table.replaceAll("[^A-Za-z0-9_]", "_")}_$id"
     if (!spark.catalog.tableExists(name)) {

@@ -7,24 +7,20 @@ import graft.functions.PcmFunctions
 import graft.functions.PcmFunctions.pcm_allclose
 import graft.model.Outcome
 import graft.rules._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Execution config. `saltBuckets` drives the two-phase salted aggregation
   * on the hot partition key (≈80% of rows share codec=pcm_s16le — see
   * ClipSynth); `broadcastThresholdBytes` drives explicit broadcast-vs-
-  * shuffle join selection by estimated side size (north rule). */
+  * shuffle join selection by estimated side size (north rule). The
+  * partition column is fixed (`codec`) and the SNR threshold comes from
+  * the [[graft.rules.PcmEquality]] rule. */
 final case class EngineConfig(
-    partitionCol: String = "codec",
     saltBuckets: Int = 16,
     broadcastThresholdBytes: Long = 10L << 20,
-    minSnrDb: Double = 30.0,
-    /** dedup+reuse: persist the deduplicated event set once instead of
-      * recomputing its shuffle for every rule branch. At cluster scale this
-      * becomes "write the deduped snapshot to a scratch table" — same
-      * pattern, different storage tier. */
-    persistEvents: Boolean = true,
     /** When true, the pcm_equality diff decodes and SNR-compares EVERY
       * matched row instead of short-circuiting byte-hash-equal pairs —
       * semantically identical (byte-equal ⇒ SNR=∞), but compute-weighted
@@ -76,6 +72,9 @@ object ValidationEngine {
 
   private val PV = "_pv" // internal partition-values column on violations
 
+  /** Verdicts, lineage and resume are keyed per codec. */
+  private val PartitionCol = "codec"
+
   /** Salt derived from the natural key: rows of the same hot *partition*
     * spread over `saltBuckets` reducers in phase 1, then phase 2 merges the
     * (few) per-salt partials per partition. All phase-1 aggregates used
@@ -83,15 +82,25 @@ object ValidationEngine {
   private def saltCol(cfg: EngineConfig): Column =
     pmod(xxhash64(col("clip_id")), lit(cfg.saltBuckets))
 
-  private def pvCol(cfg: EngineConfig): Column =
-    concat(lit(cfg.partitionCol + "="), coalesce(col(cfg.partitionCol).cast("string"), lit("null")))
+  /** `codec=<value>` (`codec=null` for a NULL codec): the partition value
+    * that violations, the stats pass and the resume filter all key on. */
+  private[engine] def pvCol: Column =
+    concat(lit(PartitionCol + "="), coalesce(col(PartitionCol).cast("string"), lit("null")))
 
-  /** 128-bit full-row fingerprint (two independent xxhash64 lanes — at
-    * 10^12 rows a single 64-bit lane has a non-negligible birthday
-    * collision chance). */
-  private def fpCols: Seq[Column] = Seq(
-    xxhash64(lit(1), col("clip_id"), col("bytes"), col("sr_hz"), col("dur_ms"), col("codec"), col("transcript")).as("_fp1"),
-    xxhash64(lit(2), col("clip_id"), col("bytes"), col("sr_hz"), col("dur_ms"), col("codec"), col("transcript")).as("_fp2"))
+  /** `table=<parent>`: the pseudo-partition of a referential rule's orphan
+    * direction, which has no codec. */
+  private def orphanPv(rule: Referential): String = s"table=${rule.parentTable}"
+
+  /** The 128-bit payload identity: two independent xxhash64 lanes (seeds 3
+    * and 4) over `bytes`, named `<prefix>1` and `<prefix>2`. */
+  private def payloadLanes(prefix: String): Seq[Column] = Seq(
+    xxhash64(lit(3), col("bytes")).as(s"${prefix}1"),
+    xxhash64(lit(4), col("bytes")).as(s"${prefix}2"))
+
+  /** Every column but the payload, plus its `_h1`/`_h2` lanes: the narrow
+    * frame that both the diff join's cur side and the metadata dedup read. */
+  private def hashPayload(df: DataFrame): DataFrame =
+    df.select(df.columns.filterNot(_ == "bytes").map(col).toSeq ++ payloadLanes("_h"): _*)
 
   /** Hash-only dedup: `dropDuplicates` would aggregate `first(col)` over
     * every carried column, and any STRING column forces Spark into
@@ -101,17 +110,23 @@ object ValidationEngine {
     * surrogate is re-evaluated on both join sides, so a reordered upstream
     * or task retry could keep zero or two rows of a group.
     *
-    * Instead: ONE hash exchange on the fingerprint longs, a spillable
-    * fixed-key local sort, and a streaming first-of-run pass. Deterministic
-    * by construction: the fingerprint covers every column (including ones
-    * later dropped), so rows within a group are byte-identical and the
-    * emitted row's content does not depend on which physical row survives
-    * a retry or reorder. Constant memory, single shuffle, no join. */
+    * Instead: ONE hash exchange on a 128-bit full-row fingerprint (two
+    * independent xxhash64 lanes `_fp1`/`_fp2` — at 10^12 rows a single
+    * 64-bit lane has a non-negligible birthday collision chance), a
+    * spillable fixed-key local sort, and a streaming first-of-run pass.
+    * Deterministic by construction: the fingerprint covers every column of
+    * `df` (including ones later dropped), so rows within a group are
+    * byte-identical and the emitted row's content does not depend on which
+    * physical row survives a retry or reorder. Constant memory, single
+    * shuffle, no join. */
   private def dedupByFingerprint(df: DataFrame, keepFp: Boolean = false): DataFrame = {
-    val schema = df.schema
+    val cs = df.columns.map(col).toSeq
+    val fp = df.select(cs ++ Seq(
+      xxhash64((lit(1) +: cs): _*).as("_fp1"), xxhash64((lit(2) +: cs): _*).as("_fp2")): _*)
+    val schema = fp.schema
     val i1 = schema.fieldIndex("_fp1")
     val i2 = schema.fieldIndex("_fp2")
-    df.repartition(col("_fp1"), col("_fp2"))
+    fp.repartition(col("_fp1"), col("_fp2"))
       .sortWithinPartitions(col("_fp1"), col("_fp2"))
       .mapPartitions { it =>
         var h1 = 0L; var h2 = 0L; var first = true
@@ -127,38 +142,29 @@ object ValidationEngine {
   /** Exact-duplicate event removal (S4). Dedup key = full payload
     * fingerprint; the fingerprint keeps the shuffle key narrow while the
     * row rides along. */
-  def dedupEvents(clips: DataFrame): DataFrame =
-    dedupByFingerprint(clips.select(col("*") +: fpCols: _*))
+  def dedupEvents(clips: DataFrame): DataFrame = dedupByFingerprint(clips)
 
-  /** Metadata-only deduplicated view: the payload participates in the
-    * fingerprint but is DROPPED before the dedup shuffle, so the exchange
-    * carries ~40 bytes/row instead of the multi-KB audio payload. All
-    * metadata rules (stats, uniqueness, referential) run off this.
+  /** Metadata-only deduplicated view: [[dedupHashedMeta]] over the
+    * [[hashPayload]] projection, so the exchange carries ~40 bytes/row
+    * instead of the multi-KB audio payload. All metadata rules (stats,
+    * uniqueness, referential) run off this.
     *
     * The `_fp1` fingerprint lane is KEPT on the output: it is a
     * deterministic function of the FULL original row (payload included), is
     * distinct across surviving rows by construction of the dedup, and so is
     * the ideal uniqueness-salt source — unconditionally spread (even when a
     * hot key's duplicates are metadata-identical) yet stable under task
-    * retry (see [[uniquenessViolations]]). */
-  def dedupEventsMeta(clips: DataFrame): DataFrame =
-    dedupByFingerprint(clips.select(col("*") +: fpCols: _*).drop("bytes"), keepFp = true)
+    * retry (see [[keyCounts]]). */
+  def dedupEventsMeta(clips: DataFrame): DataFrame = dedupHashedMeta(hashPayload(clips))
 
-  /** [[dedupEventsMeta]] over a pre-hashed narrow frame (meta columns +
-    * the `_h1`/`_h2` 128-bit payload-hash lanes): the full-row fingerprint
-    * hashes the payload LANES instead of re-reading the multi-KB bytes, so
-    * the dedup costs no payload scan at all. Same dedup equivalence classes
-    * as the bytes-covering fingerprint — rows identical in every column
-    * (payload included) get equal fingerprints, differing rows collide only
-    * in the same 128-bit class the engine already accepts. */
-  private def dedupHashedMeta(hm: DataFrame): DataFrame = {
-    val cs = hm.columns.map(col).toSeq
-    val fp = Seq(
-      xxhash64((lit(1) +: cs): _*).as("_fp1"),
-      xxhash64((lit(2) +: cs): _*).as("_fp2"))
-    dedupByFingerprint(hm.select(cs ++ fp: _*), keepFp = true)
-      .drop("_h1", "_h2")
-  }
+  /** The metadata dedup over a [[hashPayload]] frame: the full-row
+    * fingerprint hashes the payload LANES instead of the multi-KB bytes, so
+    * over run()'s cached frame the dedup costs no payload scan at all. Rows
+    * identical in every column (payload included) get equal fingerprints;
+    * differing rows collide only in the 128-bit class the engine already
+    * accepts. */
+  private def dedupHashedMeta(hm: DataFrame): DataFrame =
+    dedupByFingerprint(hm, keepFp = true).drop("_h1", "_h2")
 
   /** The fused per-partition stats pass: one salted two-phase aggregation
     * for ALL stats rules. Returns one row per partition value with a column
@@ -186,12 +192,11 @@ object ValidationEngine {
       case _ => // uniqueness/referential/pcm run as their own (join) jobs
     }
     events
-      .groupBy(col(cfg.partitionCol), saltCol(cfg).as("_salt"))
+      .groupBy(col(PartitionCol), saltCol(cfg).as("_salt"))
       .agg(p1.head, p1.tail.toSeq: _*)
-      .groupBy(col(cfg.partitionCol))
+      .groupBy(col(PartitionCol))
       .agg(p2.head, p2.tail.toSeq: _*)
-      .withColumn(PV, concat(lit(cfg.partitionCol + "="),
-        coalesce(col(cfg.partitionCol).cast("string"), lit("null"))))
+      .withColumn(PV, pvCol)
   }
 
   /** Explicit broadcast-vs-shuffle selection by estimated build-side size
@@ -228,7 +233,7 @@ object ValidationEngine {
     * non-null ones explode. N rules = N scan stages before; 1 stage now —
     * part of shrinking the engine's serial (driver-scheduling) term, which
     * both bounds q28's floor and caps small-corpus scaling efficiency. */
-  private def rowLevelViolations(events: DataFrame, rules: Seq[Rule], cfg: EngineConfig): Seq[DataFrame] = {
+  private def rowLevelViolations(events: DataFrame, rules: Seq[Rule]): Seq[DataFrame] = {
     val emitters: Seq[Column] = rules.collect {
       case r @ NullRate(c, _) =>
         when(col(c).isNull, struct(lit(r.ruleId).as("rule_id"),
@@ -239,58 +244,12 @@ object ValidationEngine {
     }
     if (emitters.isEmpty) Nil
     else Seq(events
-      .select(col("clip_id"), pvCol(cfg).as(PV),
+      .select(col("clip_id"), pvCol.as(PV),
         filter(array(emitters: _*), e => e.isNotNull).as("_emits"))
       .filter(size(col("_emits")) > 0)
       .select(col("clip_id"), col(PV), explode(col("_emits")).as("_e"))
       .select(col("clip_id"), col("_e.rule_id").as("rule_id"),
         col("_e.observed").as("observed"), col("_e.expected").as("expected"), col(PV)))
-  }
-
-  /** Salted two-phase uniqueness: phase 1 counts per (key, salt) — the salt
-    * here spreads a pathologically hot key over reducers — phase 2 merges
-    * per key and keeps multiplicity > 1.
-    *
-    * The partition attribution (min PV, deterministic) is computed in a
-    * THIRD, tiny aggregation over only the duplicated keys' rows: a string
-    * aggregate in the full-data phases would force SortBasedAggregation
-    * (string buffers are not hash-aggregable) — a full sort of every event.
-    * Phases 1-2 stay all-fixed-width (pure HashAggregate); the string
-    * min runs over the handful of violating rows after a semi-join. */
-  def uniquenessViolations(events: DataFrame, rule: Uniqueness, cfg: EngineConfig): DataFrame = {
-    val k = rule.column
-    // Phase-1 salt requirements: (a) spread even when a hot key's
-    // duplicates are metadata-identical (a key-derived salt degenerates to
-    // one reducer), and (b) DETERMINISTIC per row — a row-random surrogate
-    // (monotonically_increasing_id) is re-evaluated on fetch-failure /
-    // cache-eviction retries and can route rows to different reducers than
-    // the original attempt, losing or double-counting per-(key,salt)
-    // partials. The full-row fingerprint `_fp1` (kept by dedupEventsMeta)
-    // satisfies both: it covers the payload (distinct across post-dedup
-    // rows even when visible metadata is identical) and is a pure function
-    // of row content. Inputs without it fall back to hashing every visible
-    // column — still deterministic, spread whenever rows differ anywhere.
-    val saltSrc: Column =
-      if (events.columns.contains("_fp1")) col("_fp1")
-      else xxhash64(events.columns.map(col): _*)
-    val dupKeys = events
-      .select(col(k).as("_key"), pmod(saltSrc, lit(cfg.saltBuckets)).as("_salt"))
-      .groupBy(col("_key"), col("_salt"))
-      .agg(count(lit(1)).as("_c"))
-      .groupBy(col("_key"))
-      .agg(sum("_c").as("_n"))
-      .filter(col("_n") > 1)
-    // (run() uses the fused [[keyCounts]]-based path instead of the
-    // attribution join below; this standalone form has no partition-value
-    // domain available and keeps the 3-phase plan.)
-    // null-safe attribution join: a duplicated NULL key is still a
-    // violation group (equality join would silently drop it)
-    events.select(col(k).as("_key"), pvCol(cfg).as(PV)).as("e")
-      .join(dupKeys.as("d"), col("e._key") <=> col("d._key"))
-      .groupBy(col("e._key").as("_key"), col("d._n").as("_n"))
-      .agg(min(PV).as(PV))
-      .select(col("_key").as("clip_id"), lit(rule.ruleId).as("rule_id"),
-        col("_n").cast("string").as("observed"), lit("1").as("expected"), col(PV))
   }
 
   /** Partition-value ordinal column: partition values are metadata-scale
@@ -299,10 +258,10 @@ object ValidationEngine {
     * stays inside HashAggregate — instead of a separate string-min job over
     * the violating rows (string aggregation buffers force SortAggregate).
     * The ordinal IS the lexicographic rank, so min(ordinal) ≡ min(pv). */
-  private def pvOrdinalCol(cfg: EngineConfig, pvOrdinals: Map[String, Int]): Column =
+  private def pvOrdinalCol(pvOrdinals: Map[String, Int]): Column =
     if (pvOrdinals.isEmpty) lit(null).cast("int")
     else element_at(
-      map(pvOrdinals.toSeq.flatMap { case (pv, i) => Seq(lit(pv), lit(i)) }: _*), pvCol(cfg))
+      map(pvOrdinals.toSeq.flatMap { case (pv, i) => Seq(lit(pv), lit(i)) }: _*), pvCol)
 
   private def pvDecodeCol(ord: Column, pvOrdinals: Map[String, Int]): Column =
     if (pvOrdinals.isEmpty) lit(null).cast("string")
@@ -314,7 +273,20 @@ object ValidationEngine {
     * aggregates are mergeable and fixed-width). Output: (_key, _n, _o) for
     * EVERY key — the uniqueness rule filters _n > 1, and the bidirectional
     * referential rule reuses the same rows as its child key set, so the two
-    * rules share one scan + shuffle instead of running three. */
+    * rules share one scan + shuffle instead of running three.
+    *
+    * Phase-1 salt requirements: (a) spread even when a hot key's duplicates
+    * are metadata-identical (a key-derived salt degenerates to one
+    * reducer), and (b) DETERMINISTIC per row — a row-random surrogate
+    * (monotonically_increasing_id) is re-evaluated on fetch-failure /
+    * cache-eviction retries and can route rows to different reducers than
+    * the original attempt, losing or double-counting per-(key,salt)
+    * partials. The full-row fingerprint `_fp1` (kept by [[dedupEventsMeta]])
+    * satisfies both: it covers the payload (distinct across post-dedup rows
+    * even when visible metadata is identical) and is a pure function of row
+    * content. Inputs without it fall back to hashing every visible column —
+    * still deterministic, spread whenever rows differ anywhere. A NULL key
+    * is a group of its own, so duplicated NULL keys still surface. */
   def keyCounts(events: DataFrame, keyCol: String, cfg: EngineConfig,
       pvOrdinals: Map[String, Int]): DataFrame = {
     val saltSrc: Column =
@@ -322,7 +294,7 @@ object ValidationEngine {
       else xxhash64(events.columns.map(col): _*)
     events
       .select(col(keyCol).as("_key"), pmod(saltSrc, lit(cfg.saltBuckets)).as("_salt"),
-        pvOrdinalCol(cfg, pvOrdinals).as("_o"))
+        pvOrdinalCol(pvOrdinals).as("_o"))
       .groupBy(col("_key"), col("_salt"))
       .agg(count(lit(1)).as("_c"), min(col("_o")).as("_o"))
       .groupBy(col("_key"))
@@ -345,7 +317,7 @@ object ValidationEngine {
   def referentialViolations(events: DataFrame, parent: DataFrame, rule: Referential,
       cfg: EngineConfig, childKeys: Option[DataFrame] = None): Seq[DataFrame] = {
     val parentKeys = parent.select(col(rule.parentColumn).as(rule.childColumn)).distinct()
-    val missing = sizeAwareJoin(events.select(col(rule.childColumn), pvCol(cfg).as(PV)),
+    val missing = sizeAwareJoin(events.select(col(rule.childColumn), pvCol.as(PV)),
         parentKeys, Seq(rule.childColumn), "left_anti", cfg.broadcastThresholdBytes)
       .select(col(rule.childColumn).as("clip_id"), lit(rule.ruleId).as("rule_id"),
         lit(s"no ${rule.parentTable} row").as("observed"), lit("present").as("expected"), col(PV))
@@ -356,10 +328,16 @@ object ValidationEngine {
           "left_anti", cfg.broadcastThresholdBytes)
         .select(col(rule.childColumn).as("clip_id"), lit(rule.ruleId).as("rule_id"),
           lit(s"orphan ${rule.parentTable} row").as("observed"),
-          lit("clip present").as("expected"), lit(s"table=${rule.parentTable}").as(PV))
+          lit("clip present").as("expected"), lit(orphanPv(rule)).as(PV))
       Seq(missing, orphans)
     }
   }
+
+  /** Baseline-side hash projection, exposed so run() can materialize it
+    * concurrently with the cur-side payload scan (the two scans are the
+    * pcm branch's serial head otherwise). */
+  private[engine] def baselineHashProjection(baseline: DataFrame): DataFrame =
+    baseline.select((col("clip_id") +: payloadLanes("_bh")) :+ col("transcript").as("_bt"): _*)
 
   /** The core 3-way diff classify (J2/J3): left-outer join current events
     * against the baseline snapshot on the natural key; absent ⇒ new,
@@ -372,32 +350,26 @@ object ValidationEngine {
     * byte-equal ⇒ unchanged (the reference's byte-equality fast path).
     * Only hash-mismatched rows ("suspects", typically ≪1%) pay the decode:
     * a second, suspect-filtered join re-fetches both payloads and runs the
-    * SNR ≥ 30 dB allclose. AQE turns the suspect joins into broadcasts at
-    * runtime when the suspect set is small. */
-  /** Baseline-side hash projection, exposed so run() can materialize it
-    * concurrently with the cur-side payload scan (the two scans are the
-    * pcm branch's serial head otherwise). */
-  private[engine] def baselineHashProjection(baseline: DataFrame): DataFrame =
-    baseline.select(col("clip_id"),
-      xxhash64(lit(3), col("bytes")).as("_bh1"), xxhash64(lit(4), col("bytes")).as("_bh2"),
-      col("transcript").as("_bt"))
+    * SNR ≥ `rule.minSnrDb` allclose. AQE turns the suspect joins into
+    * broadcasts at runtime when the suspect set is small.
+    *
+    * Standalone, the threshold is the [[PcmEquality]] default; run() passes
+    * its rule and the shared hash frames to [[classify]], and keeps the
+    * `_h1`/`_h2` lanes that classify leaves on its hash-first output. */
+  def classifyAgainstBaseline(events: DataFrame, baseline: DataFrame, cfg: EngineConfig): DataFrame =
+    classify(events, baseline, cfg, PcmEquality(), identity, None, None).drop("_h1", "_h2")
 
-  def classifyAgainstBaseline(events: DataFrame, baseline: DataFrame, cfg: EngineConfig,
-      cacheHook: DataFrame => DataFrame = identity, keepHashes: Boolean = false,
-      hashedCur: Option[DataFrame] = None, hashedBase: Option[DataFrame] = None): DataFrame = {
-    if (cfg.fullDecodeVerify) return classifyFullDecode(events, baseline, cfg)
-    def h(c: Column, lane: Int): Column = xxhash64(lit(lane), c)
+  private def classify(events: DataFrame, baseline: DataFrame, cfg: EngineConfig,
+      rule: PcmEquality, cacheHook: DataFrame => DataFrame,
+      hashedCur: Option[DataFrame], hashedBase: Option[DataFrame]): DataFrame = {
+    if (cfg.fullDecodeVerify) return classifyFullDecode(events, baseline, cfg, rule.minSnrDb)
     // cur side: either the shared pre-hashed narrow frame (run() computes
     // it in ONE payload scan that also feeds the dedup fingerprint), or an
     // inline hash projection consumed exactly ONCE by the diff join.
     // Suspect payloads are re-fetched from the raw tables below, not from
     // here.
-    val cur = hashedCur.getOrElse(events
-      .withColumn("_h1", h(col("bytes"), 3)).withColumn("_h2", h(col("bytes"), 4))
-      .drop("bytes"))
-    val base = hashedBase.getOrElse(baseline.select(col("clip_id"),
-      h(col("bytes"), 3).as("_bh1"), h(col("bytes"), 4).as("_bh2"),
-      col("transcript").as("_bt")))
+    val cur = hashedCur.getOrElse(hashPayload(events))
+    val base = hashedBase.getOrElse(baselineHashProjection(baseline))
     // `pre` — the widest shuffle in the system — is persisted (narrow:
     // hashes only, no payload) so its consumers (suspect derivation and
     // the final join) pay the exchange exactly ONCE.
@@ -419,22 +391,20 @@ object ValidationEngine {
     // every payload in the corpus a second time (the r3 plan's cost).
     val curPay = events.select(col("clip_id"), col("codec"), col("bytes"))
       .join(suspectIds, Seq("clip_id"), "left_semi")
-      .select(col("clip_id"), col("codec"), col("bytes"),
-        h(col("bytes"), 3).as("_h1"), h(col("bytes"), 4).as("_h2"))
+      .select(Seq(col("clip_id"), col("codec"), col("bytes")) ++ payloadLanes("_h"): _*)
       .dropDuplicates("clip_id", "_h1", "_h2")
     val basePay = baseline.select(col("clip_id"), col("bytes").as("_bb"))
       .join(suspectIds, Seq("clip_id"), "left_semi")
     val resolved = curPay.join(basePay, Seq("clip_id"))
       .select(col("clip_id"), col("_h1"), col("_h2"),
-        pcm_allclose(col("codec"), col("_bb"), col("bytes"), cfg.minSnrDb).as("_pcm_ok"))
+        pcm_allclose(col("codec"), col("_bb"), col("bytes"), rule.minSnrDb).as("_pcm_ok"))
 
     val out = pre.join(resolved, Seq("clip_id", "_h1", "_h2"), "left_outer")
       .withColumn("outcome",
         when(col("_prelim") =!= "_suspect", col("_prelim"))
           .when(col("_pcm_ok"), Outcome.Unchanged)
           .otherwise(Outcome.Changed))
-    out.drop(Seq("_bh1", "_bh2", "_bt", "_prelim", "_pcm_ok") ++
-      (if (keepHashes) Nil else Seq("_h1", "_h2")): _*)
+    out.drop("_bh1", "_bh2", "_bt", "_prelim", "_pcm_ok")
   }
 
   /** PCM branch works on the RAW (un-deduped) clips: classifying an exact
@@ -448,17 +418,16 @@ object ValidationEngine {
     * exactly this dedup). */
   private def pcmViolations(rawClips: DataFrame, baseline: DataFrame, rule: PcmEquality,
       cfg: EngineConfig, cacheHook: DataFrame => DataFrame,
-      hashedCur: Option[DataFrame] = None, hashedBase: Option[DataFrame] = None): DataFrame = {
+      hashedCur: DataFrame, hashedBase: Option[DataFrame]): DataFrame = {
     val metaCols = rawClips.columns.filterNot(_ == "bytes").toSeq
     val dedupKey =
       if (cfg.fullDecodeVerify) metaCols :+ "bytes"
       else metaCols ++ Seq("_h1", "_h2")
-    classifyAgainstBaseline(rawClips, baseline,
-        cfg.copy(minSnrDb = rule.minSnrDb), cacheHook, keepHashes = true, hashedCur, hashedBase)
+    classify(rawClips, baseline, cfg, rule, cacheHook, Some(hashedCur), hashedBase)
       .filter(col("outcome") =!= Outcome.Unchanged)
       .dropDuplicates(dedupKey)
       .select(col("clip_id"), lit(rule.ruleId).as("rule_id"),
-        col("outcome").as("observed"), lit(Outcome.Unchanged).as("expected"), pvCol(cfg).as(PV))
+        col("outcome").as("observed"), lit(Outcome.Unchanged).as("expected"), pvCol.as(PV))
   }
 
   /** Full-decode classify: the payloads ride the join and every matched row
@@ -467,7 +436,7 @@ object ValidationEngine {
     * scales with cores where the hash-first path saturates memory
     * bandwidth. */
   private def classifyFullDecode(events: DataFrame, baseline: DataFrame,
-      cfg: EngineConfig): DataFrame = {
+      cfg: EngineConfig, minSnrDb: Double): DataFrame = {
     val base = baseline.select(col("clip_id"),
       col("bytes").as("_bb"), col("transcript").as("_bt"))
     sizeAwareJoin(events, base, Seq("clip_id"), "left_outer", cfg.broadcastThresholdBytes,
@@ -475,7 +444,7 @@ object ValidationEngine {
       .withColumn("outcome",
         when(col("_bb").isNull, Outcome.New)
           .when(!PcmFunctions.pcm_snr_db(col("codec"), col("_bb"), col("bytes"))
-            .geq(cfg.minSnrDb) || !(col("transcript") <=> col("_bt")), Outcome.Changed)
+            .geq(minSnrDb) || !(col("transcript") <=> col("_bt")), Outcome.Changed)
           .otherwise(Outcome.Unchanged))
       .drop("_bb", "_bt")
   }
@@ -513,10 +482,12 @@ object ValidationEngine {
       baselineStats: Option[DataFrame] = None): ValidationReport = {
 
     lazy val baselineDf = baseline
+    // dedup+reuse: a frame that several branches read is persisted once
+    // instead of recomputing its shuffle per consumer. At cluster scale this
+    // becomes "write it to a scratch table" — same pattern, different
+    // storage tier.
     val extraCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val cacheHook: DataFrame => DataFrame =
-      if (!cfg.persistEvents) identity
-      else df => { val p = df.persist(); extraCaches += p; p }
+    val cacheHook: DataFrame => DataFrame = df => { val p = df.persist(); extraCaches += p; p }
 
     // ---- ONE payload scan for the whole run (hash-first mode): the
     // 128-bit payload-hash lanes computed here feed BOTH the pcm diff
@@ -525,17 +496,10 @@ object ValidationEngine {
     // heaviest duplicated work in the run. Materialized SYNCHRONOUSLY
     // (one count job) before the branch fan-out: the pcm future and the
     // meta chain would otherwise race the cold cache and both compute the
-    // scan. Requires the cache (persistEvents) — without it the shared
-    // frame would be recomputed per consumer, which is exactly the old
-    // plan but with an extra count.
-    val payloadHash: Option[DataFrame] =
-      if (cfg.fullDecodeVerify || !cfg.persistEvents) None
-      else Some {
-        val metaCols = clips.columns.filterNot(_ == "bytes").map(col).toSeq
-        cacheHook(clips.select(metaCols ++ Seq(
-          xxhash64(lit(3), col("bytes")).as("_h1"),
-          xxhash64(lit(4), col("bytes")).as("_h2")): _*))
-      }
+    // scan. In full-decode mode the pcm branch reads the raw payloads, so
+    // the dedup is the frame's only reader and it stays uncached.
+    val payloadHash: DataFrame =
+      if (cfg.fullDecodeVerify) hashPayload(clips) else cacheHook(hashPayload(clips))
     // the baseline-side hash projection is narrow too (clip_id + 2 hash
     // lanes + transcript) — persist it and scan it CONCURRENTLY with the
     // cur-side scan below: the two payload scans were the pcm branch's
@@ -543,8 +507,8 @@ object ValidationEngine {
     // Built ONLY when a pcm rule exists: `baseline` is by-name precisely so
     // a run with stored drift sketches and no pcm rule never reads it.
     val hashedBase: Option[DataFrame] =
-      if (!rules.exists(_.isInstanceOf[PcmEquality])) None
-      else payloadHash.map(_ => cacheHook(baselineHashProjection(baselineDf)))
+      if (cfg.fullDecodeVerify || !rules.exists(_.isInstanceOf[PcmEquality])) None
+      else Some(cacheHook(baselineHashProjection(baselineDf)))
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -561,7 +525,7 @@ object ValidationEngine {
       case None => Future.successful(())
       case Some(b) => Future { JobScope(sc, "baseline-hash-scan", jobGroup) { b.count(); () } }
     }
-    payloadHash.foreach(hm => JobScope(sc, "payload-hash-scan") { hm.count() })
+    if (!cfg.fullDecodeVerify) JobScope(sc, "payload-hash-scan") { payloadHash.count() }
 
     // ---- the pcm branch reads ONLY the shared payload-hash frames (or, in
     // full-decode mode, the raw clips) + baseline tables — nothing it needs
@@ -587,8 +551,7 @@ object ValidationEngine {
       }
     }
 
-    val eventsMeta0 = payloadHash.map(dedupHashedMeta).getOrElse(dedupEventsMeta(clips))
-    val eventsMeta = if (cfg.persistEvents) eventsMeta0.persist() else eventsMeta0
+    val eventsMeta = dedupHashedMeta(payloadHash).persist()
 
     val stats = statsPass(eventsMeta, rules, cfg).persist() // rows = #partitions (tiny)
     // Materialize the stats pass FIRST: this single job populates BOTH the
@@ -597,7 +560,7 @@ object ValidationEngine {
     // the stats cache, and its rows are needed driver-side anyway (verdict
     // thresholds + the partition-value ordinal domain). Replaces the
     // separate count() populate job of earlier rounds.
-    val statsByPv: Map[String, org.apache.spark.sql.Row] =
+    val statsByPv: Map[String, Row] =
       JobScope(sc, "stats-collect") { stats.collect().map(r => r.getAs[String](PV) -> r).toMap }
     // lexicographic ranks over the (metadata-scale) partition-value domain;
     // lets min-PV attribution run as a fixed-width min(ordinal) aggregate
@@ -621,7 +584,7 @@ object ValidationEngine {
       }.toMap
 
     val metaBranches: Seq[DataFrame] =
-      rowLevelViolations(eventsMeta, rules, cfg) ++
+      rowLevelViolations(eventsMeta, rules) ++
       rules.collect { case u: Uniqueness =>
         uniquenessFromKeyCounts(keyCountsByCol(u.column), u, pvOrdinals) } ++
       refRules.map { r =>
@@ -631,14 +594,8 @@ object ValidationEngine {
       }.flatten ++
       driftRules.map(d => driftViolations(stats, baseStats.get, d, cfg))
 
-    val emptyViolations = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("clip_id", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("rule_id", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("observed", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("expected", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(PV, org.apache.spark.sql.types.StringType))))
+    val emptyViolations = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(
+      s"clip_id STRING, rule_id STRING, observed STRING, expected STRING, $PV STRING"))
     // violations are the SMALL output (only failing rows): every branch is
     // persisted so its consumers (violation counts here, the caller's
     // violations write, lineage) run the expensive rule branches exactly
@@ -687,7 +644,7 @@ object ValidationEngine {
     // the orphan anti-join against an empty pending set and fabricate
     // violations for every transcript.
     val pseudoPvs = rules.collect {
-      case r: Referential if r.bidirectional => s"table=${r.parentTable}"
+      case r: Referential if r.bidirectional => orphanPv(r)
     }
     val partitions =
       (statsByPv.keySet ++ vCounts.keysIterator.map(_._1) ++ pseudoPvs).toSeq.sorted
@@ -702,16 +659,13 @@ object ValidationEngine {
       }
       case _ => None
     }
-    val verdictRows: java.util.List[org.apache.spark.sql.Row] =
+    val verdictRows: java.util.List[Row] =
       (for { pv <- partitions; r <- rules } yield {
         val vc = vCounts.getOrElse((pv, r.ruleId), 0L)
-        org.apache.spark.sql.Row(pv, r.ruleId, statPass(pv, r).getOrElse(vc == 0L), vc)
+        Row(pv, r.ruleId, statPass(pv, r).getOrElse(vc == 0L), vc)
       }).asJava
-    val verdictSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("partition_values", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("rule_id", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("pass", org.apache.spark.sql.types.BooleanType, nullable = false),
-      org.apache.spark.sql.types.StructField("violation_count", org.apache.spark.sql.types.LongType, nullable = false)))
+    val verdictSchema = StructType.fromDDL("partition_values STRING NOT NULL, " +
+      "rule_id STRING NOT NULL, pass BOOLEAN NOT NULL, violation_count BIGINT NOT NULL")
 
     ValidationReport(
       verdicts = spark.createDataFrame(verdictRows, verdictSchema),

@@ -21,6 +21,7 @@ import org.apache.spark.sql.functions._
   * encoding would bloat the plan by megabytes). */
 object AnnOps {
 
+  import DedupOps.spread
   import org.apache.spark.sql.graft.VectorExpressions.array_dot
 
   /** Dot product as ONE native primitive loop ([[ArrayDot]]) — bit-identical
@@ -51,16 +52,6 @@ object AnnOps {
 
   private def pairSim(qv: String, qn: String, cv: String, cn: String): Column =
     dot(col(qv), col(cv)) / (col(qn) * col(cn))
-
-  /** Spread rows over the session's configured shuffle parallelism behind an
-    * explicit Exchange: scan parallelism follows file splits and AQE
-    * coalesces small-byte exchanges — both the wrong unit for a CPU-heavy
-    * per-row vector fold (a 50 MB single-file embedding table otherwise
-    * folds on one core). */
-  private def spread(df: DataFrame, key: String): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(parts, col(key))
-  }
 
   /** Exact cosine top-k: every query row against every corpus row (the
     * query side is broadcast — callers keep it small), ranked per query
@@ -187,20 +178,7 @@ object AnnOps {
       maxBucketSize: Int = 10000): DataFrame = {
     val bandCols = (0 until bands).map(b =>
       struct(lit(b).as("band"), lshBucket(col(vecCol), dim, p, seed = 42L + b).as("h")))
-    val bucketKey = Seq(col("_band"), col("_h"))
-    val buckets = vectors
-      .select(col(idCol).as("_id"), explode(array(bandCols: _*)).as("_b"))
-      .select(col("_id"), col("_b.band").as("_band"), col("_b.h").as("_h"))
-      .withColumn("_bn", count(lit(1)).over(Window.partitionBy(bucketKey: _*)))
-      .withColumn("_bmin", min(col("_id")).over(Window.partitionBy(bucketKey: _*)))
-    val ok = buckets.filter(col("_bn") <= maxBucketSize)
-    val pairs = ok.as("x").join(ok.as("y"),
-        col("x._band") === col("y._band") && col("x._h") === col("y._h") &&
-          col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"))
-    val markers = buckets.filter(col("_bn") > maxBucketSize)
-      .select(col("_bmin").as("a"), col("_bmin").as("b"))
-    pairs.unionByName(markers).distinct()
+    DedupOps.cappedBandPairs(vectors, col(idCol), bandCols, maxBucketSize)
   }
 
   /** Exact-cosine verification of a candidate-pair set (a, b): vectors

@@ -43,11 +43,11 @@ object DedupOps {
   /** Spread `df` over the session's configured shuffle parallelism before
     * a row-amplifying or CPU-heavy projection. Scan parallelism follows
     * file splits (`maxPartitionBytes`), which is the WRONG unit for an
-    * explode that amplifies rows ~100× or a per-row tokenize/sort: a
-    * 100 MB parquet split exploding to 10 GB of shingles runs on one core.
-    * The explicit partition count keeps AQE from re-coalescing the (small
-    * pre-explode) exchange back down. */
-  private def spread(df: DataFrame, key: String): DataFrame = {
+    * explode that amplifies rows ~100×, a per-row tokenize/sort or a
+    * per-row vector fold (AnnOps): a 100 MB parquet split exploding to
+    * 10 GB of shingles runs on one core. The explicit partition count keeps
+    * AQE from re-coalescing the (small pre-explode) exchange back down. */
+  private[ops] def spread(df: DataFrame, key: String): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.repartition(parts, col(key))
   }
@@ -287,12 +287,22 @@ object DedupOps {
       struct(lit(bnd).as("band"),
         xxhash64((bnd * rows until (bnd + 1) * rows).map(i => col(s"_mh$i")): _*).as("h"))
     }
+    cappedBandPairs(signatures, col("_id"), bandCols, maxBucketSize)
+  }
+
+  /** Distinct candidate pairs (a, b), a < b, of the rows of `df` that share
+    * a band bucket: `bandCols` are `struct(band, h)` bucket keys, one per
+    * band, and `id` is the row id. A bucket of more than `maxBucketSize`
+    * rows is left out of the self-join and emits ONE `a == b == min(id)`
+    * marker row instead (see [[lshCandidatePairs]]). */
+  private[ops] def cappedBandPairs(df: DataFrame, id: Column, bandCols: Seq[Column],
+      maxBucketSize: Int): DataFrame = {
     // bucket membership count via ONE window pass over the (band, hash)
     // shuffle both join branches need anyway; identical in both branches,
     // so ReuseExchange evaluates it once
     val bucketKey = Seq(col("_band"), col("_h"))
-    val buckets = signatures
-      .select(col("_id"), explode(array(bandCols: _*)).as("_b"))
+    val buckets = df
+      .select(id.as("_id"), explode(array(bandCols: _*)).as("_b"))
       .select(col("_id"), col("_b.band").as("_band"), col("_b.h").as("_h"))
       .withColumn("_bn", count(lit(1)).over(Window.partitionBy(bucketKey: _*)))
       .withColumn("_bmin", min(col("_id")).over(Window.partitionBy(bucketKey: _*)))

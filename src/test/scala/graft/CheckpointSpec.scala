@@ -311,7 +311,8 @@ class CheckpointSpec extends AnyFunSuite {
       store.appendClustered("baseline_clips", ClipSynth.baseline(spark, n).toDF(), "clip_id", 4)
     val snap = store.appendClustered("clips", ClipSynth.clips(spark, n).toDF(), "clip_id", 4)
     assert(store.clusteringOf("clips", snap).contains(("clip_id", 4)))
-    assert(store.isColocated("clips", Some(snap)) && store.isColocated("baseline_clips"))
+    assert(store.clusteringIfColocated("clips", Some(snap)).isDefined &&
+      store.clusteringIfColocated("baseline_clips").isDefined)
     assert(store.clusteringOf("baseline_clips", snapB).contains(("clip_id", 4)))
 
     // read-back is row-identical to a plain (unclustered) append of the same data
@@ -343,8 +344,24 @@ class CheckpointSpec extends AnyFunSuite {
     val before = store.read(spark, "clips").count()
     store.append("clips", Seq(("zz", Array[Byte](1), 16000, 10, "pcm_s16le", "t"))
       .toDF("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"))
-    assert(!store.isColocated("clips"))
+    assert(store.clusteringIfColocated("clips").isEmpty)
     assert(store.read(spark, "clips").count() == before + 1)
+  }
+
+  test("co-location needs both tables clustered on clip_id with one bucket count") {
+    val n = 500L
+    def colocated(key: String, baseBuckets: Int): Boolean = {
+      val root = Files.createTempDirectory(s"graft-coloc-key-$key").toString
+      val store = new SnapshotStore(s"$root/state")
+      store.appendClustered("baseline_clips", ClipSynth.baseline(spark, n).toDF(), key, baseBuckets)
+      val snap = store.appendClustered("clips", ClipSynth.clips(spark, n).toDF(), key, 4)
+      new CheckpointedRunner(store, new SnapshotStore(s"$root/out"))
+        .configFor(snap, EngineConfig()).colocatedInputs
+    }
+    assert(colocated("clip_id", 4))
+    // same (key, numBuckets) on both sides, but not the diff join's key
+    assert(!colocated("codec", 4))
+    assert(!colocated("clip_id", 8))
   }
 
   test("runResumable: clustered corpus yields outcomes identical to unclustered") {

@@ -108,13 +108,41 @@ class EngineSpec extends AnyFunSuite {
       (Some("a"), "t4", 300, 8000, "ulaw"),
       (Some("b"), "t5", 300, 8000, "alaw"))
       .toDF("clip_id", "transcript", "dur_ms", "sr_hz", "codec")
-    val out = ValidationEngine
-      .uniquenessViolations(df, Uniqueness("clip_id"), EngineConfig(saltBuckets = 4))
-      .collect().map(r => (Option(r.getString(0)), r.getString(2), r.getString(4))).toSet
-    // the NULL-key group reports once (multiplicity 2, min-PV = alaw)
-    assert(out == Set(
-      (None, "2", "codec=alaw"),
-      (Some("a"), "2", "codec=ulaw")))
+      .withColumn("bytes", encode(col("transcript"), "UTF-8"))
+    val rep = ValidationEngine.run(spark, df, df, df, Seq(Uniqueness("clip_id")),
+      EngineConfig(saltBuckets = 4))
+    val out = rep.violations.collect().map(r => (Option(r.getString(0)), r.getString(2))).toSet
+    val perPv = rep.verdicts.collect().map(r => r.getString(0) -> r.getLong(3)).toMap
+    rep.unpersist()
+    // min-PV attribution now rides the keyCounts aggregation instead of a
+    // join, and grouping keeps NULL keys together: the NULL-key group reports
+    // once (multiplicity 2), and each group is counted under its smallest
+    // partition value: NULL → alaw, "a" → ulaw
+    assert(out == Set((None, "2"), (Some("a"), "2")))
+    assert(perPv == Map("codec=alaw" -> 1L, "codec=pcm_s16le" -> 0L, "codec=ulaw" -> 1L))
+  }
+
+  test("run: full-decode verify returns the same verdicts and violations as hash-first") {
+    val clips = ClipSynth.clips(spark, 1000).toDF()
+    val transcripts = ClipSynth.transcripts(spark, 1000).toDF()
+    val baseline = ClipSynth.baseline(spark, 1000).toDF()
+    def outputs(cfg: EngineConfig): (Seq[String], Seq[String]) = {
+      val rep = ValidationEngine.run(spark, clips, transcripts, baseline, Rule.standardPack, cfg)
+      // KLL sketches are insertion-order-sensitive, so only the drift
+      // verdict is compared, not the third decimal of its KS estimate
+      val v = rep.violations
+        .withColumn("observed",
+          when(col("rule_id").startsWith("drift:"), lit("drifted")).otherwise(col("observed")))
+        .collect().map(_.toString).sorted.toSeq
+      val g = rep.verdicts.collect().map(_.toString).sorted.toSeq
+      rep.unpersist()
+      (v, g)
+    }
+    val (vFull, gFull) = outputs(EngineConfig(saltBuckets = 4, fullDecodeVerify = true))
+    val (vHash, gHash) = outputs(EngineConfig(saltBuckets = 4))
+    assert(vFull == vHash)
+    assert(gFull == gHash)
+    assert(vHash.exists(_.contains("pcm_equality")) && gHash.nonEmpty)
   }
 
   test("uniqueness salt: a 10^4-copy hot key spreads evenly and deterministically") {
