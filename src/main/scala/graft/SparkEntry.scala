@@ -111,6 +111,28 @@ object SparkEntry {
     spark.read.parquet(path)
   }
 
+  /** The planted orders baseline of the diff queries (q06, q31–q33): every
+    * 7th order is absent (→ new) and every 11th carries a price one higher
+    * (→ changed). */
+  private def plantedBaseOrders(orders: DataFrame): DataFrame =
+    orders.filter(col("o_orderkey") % 7 =!= 0)
+      .select(col("o_orderkey"),
+        (col("o_totalprice") + when(col("o_orderkey") % 11 === 0, 1.0).otherwise(0.0))
+          .as("o_totalprice"))
+
+  /** Fails the query on a dedup cap marker: an overflowing duplicate cluster
+    * or band bucket surfaces as ONE `a == b` row (`DedupOps`), impossible for
+    * a real pair (a < b). The DuckDB oracles model real pairs only, so a
+    * marker reaching q15/q17/q21 must FAIL LOUDLY (raise_error) instead of
+    * passing as a self-pair at similarity 1.0. On the contract corpora no
+    * cluster approaches the cap, so the guard never fires and the result is
+    * unchanged. */
+  private[graft] def failOnCapMarker(pairs: DataFrame, query: String): DataFrame =
+    pairs.withColumn("a", when(col("a") === col("b"), raise_error(concat(
+        lit(s"$query: dedup cap exceeded (marker a == b = "), col("a").cast("string"),
+        lit(") — oracle contract models real pairs only"))))
+      .otherwise(col("a")))
+
   private def clipsReport(spark: SparkSession, dir: String) =
     reportMemo.computeIfAbsent(dir, _ => {
       prepare(spark, dir)
@@ -190,11 +212,7 @@ object SparkEntry {
     "q06_diff_classify" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val orders = t(dir, "orders")
-      val baseline = orders
-        .filter(col("o_orderkey") % 7 =!= 0)
-        .select(col("o_orderkey"),
-          (col("o_totalprice") + when(col("o_orderkey") % 11 === 0, 1.0).otherwise(0.0))
-            .as("o_totalprice"))
+      val baseline = plantedBaseOrders(orders)
       RelationalOps.diffClassify(orders, baseline, Seq("o_orderkey"), Seq("o_totalprice"))
         .groupBy(col("outcome")).agg(count(lit(1)).as("n"))
         .orderBy("outcome")
@@ -283,20 +301,9 @@ object SparkEntry {
     // ------------------------------------- token-set duplicates (jaccard=1)
     "q15_dedup_tokenset" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      // Contract-scale sentinel guard: the dedup operator emits ONE
-      // deterministic `a == b, inter = -clusterSize` marker row when a
-      // duplicate cluster overflows its cap. The DuckDB oracle models real
-      // pairs only, so a marker reaching this query must FAIL LOUDLY here
-      // (raise_error) instead of silently diverging from the oracle. On
-      // the contract corpora no cluster approaches the cap, so the guard
-      // never fires and the result is unchanged.
-      DedupOps.jaccardPairs(t(dir, "documents"), "doc_id", "text", 1, 1.0)
-        .select(
-          when(col("inter") < 0, raise_error(concat(
-              lit("q15: dedup cluster cap exceeded (marker doc_id="),
-              col("a"), lit(") — oracle contract models real pairs only")))
-            .cast("long")).otherwise(col("a")).as("a"),
-          col("b"), col("inter"))
+      failOnCapMarker(
+          DedupOps.jaccardPairs(t(dir, "documents"), "doc_id", "text", 1, 1.0), "q15")
+        .select("a", "b", "inter")
         .orderBy("a", "b")
     }),
 
@@ -315,8 +322,8 @@ object SparkEntry {
     // sketch stage itself stays ScalaTest-verified (recall vs exact pairs).
     "q17_minhash_lsh" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      DedupOps.verifiedJaccardPairs(readExport(s, dir, "cands_minhash"),
-          t(dir, "documents"), "doc_id", "text", n = 3, threshold = 0.2)
+      failOnCapMarker(DedupOps.verifiedJaccardPairs(readExport(s, dir, "cands_minhash"),
+          t(dir, "documents"), "doc_id", "text", n = 3, threshold = 0.2), "q17")
         .orderBy("a", "b")
     }),
 
@@ -359,8 +366,8 @@ object SparkEntry {
     // exact cosine over the materialized candidate set
     "q21_embedding_neardup" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      AnnOps.verifiedCosinePairs(readExport(s, dir, "cands_embneardup"),
-          t(dir, "embeddings"), threshold = 0.4)
+      failOnCapMarker(AnnOps.verifiedCosinePairs(readExport(s, dir, "cands_embneardup"),
+          t(dir, "embeddings"), threshold = 0.4), "q21")
         .orderBy("a", "b")
     }),
 
@@ -448,11 +455,7 @@ object SparkEntry {
     "q31_diff_relset" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val orders = t(dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
-      val baseOrders = t(dir, "orders")
-        .filter(col("o_orderkey") % 7 =!= 0)
-        .select(col("o_orderkey"),
-          (col("o_totalprice") + when(col("o_orderkey") % 11 === 0, 1.0).otherwise(0.0))
-            .as("o_totalprice"))
+      val baseOrders = plantedBaseOrders(t(dir, "orders"))
       val incRel = t(dir, "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey"))
       // baseline misses some links ⇒ relationship-set inequality ⇒ changed
@@ -467,10 +470,7 @@ object SparkEntry {
     "q32_nested_route" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val orders = t(dir, "orders")
-      val baseOrders = orders.filter(col("o_orderkey") % 7 =!= 0)
-        .select(col("o_orderkey"),
-          (col("o_totalprice") + when(col("o_orderkey") % 11 === 0, 1.0).otherwise(0.0))
-            .as("o_totalprice"))
+      val baseOrders = plantedBaseOrders(orders)
       val parentOut = RelationalOps.diffClassify(
         orders.select(col("o_orderkey"), col("o_totalprice")), baseOrders,
         Seq("o_orderkey"), Seq("o_totalprice"))
@@ -493,10 +493,7 @@ object SparkEntry {
     "q33_mas_jobs" -> ((s, dir) => {
       implicit val sp: SparkSession = s
       val orders = t(dir, "orders")
-      val baseline = orders.filter(col("o_orderkey") % 7 =!= 0)
-        .select(col("o_orderkey"),
-          (col("o_totalprice") + when(col("o_orderkey") % 11 === 0, 1.0).otherwise(0.0))
-            .as("o_totalprice"))
+      val baseline = plantedBaseOrders(orders)
       val unchanged = RelationalOps.diffClassify(
           orders.select(col("o_orderkey"), col("o_totalprice")), baseline,
           Seq("o_orderkey"), Seq("o_totalprice"))

@@ -1,12 +1,12 @@
 package graft.engine
 
-import graft.functions.KllMergeAgg.kll_merge_agg
-import graft.functions.KllSketchAgg
-import graft.functions.KllSketchAgg.kll_sketch_agg
 import graft.functions.PcmFunctions
 import graft.functions.PcmFunctions.pcm_allclose
 import graft.model.Outcome
 import graft.rules._
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
+import org.apache.datasketches.quantilescommon.KolmogorovSmirnov
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -102,69 +102,35 @@ object ValidationEngine {
   private def hashPayload(df: DataFrame): DataFrame =
     df.select(df.columns.filterNot(_ == "bytes").map(col).toSeq ++ payloadLanes("_h"): _*)
 
-  /** Hash-only dedup: `dropDuplicates` would aggregate `first(col)` over
-    * every carried column, and any STRING column forces Spark into
-    * SortBasedAggregation (hash aggregation requires fixed-width mutable
-    * buffers) — a full sort with per-column first() buffers. A
-    * min-surrogate-id + semi-join plan is no better: the nondeterministic
-    * surrogate is re-evaluated on both join sides, so a reordered upstream
-    * or task retry could keep zero or two rows of a group.
-    *
-    * Instead: ONE hash exchange on a 128-bit full-row fingerprint (two
-    * independent xxhash64 lanes `_fp1`/`_fp2` — at 10^12 rows a single
-    * 64-bit lane has a non-negligible birthday collision chance), a
-    * spillable fixed-key local sort, and a streaming first-of-run pass.
-    * Deterministic by construction: the fingerprint covers every column of
-    * `df` (including ones later dropped), so rows within a group are
-    * byte-identical and the emitted row's content does not depend on which
-    * physical row survives a retry or reorder. Constant memory, single
-    * shuffle, no join. */
-  private def dedupByFingerprint(df: DataFrame, keepFp: Boolean = false): DataFrame = {
-    val cs = df.columns.map(col).toSeq
-    val fp = df.select(cs ++ Seq(
-      xxhash64((lit(1) +: cs): _*).as("_fp1"), xxhash64((lit(2) +: cs): _*).as("_fp2")): _*)
-    val schema = fp.schema
-    val i1 = schema.fieldIndex("_fp1")
-    val i2 = schema.fieldIndex("_fp2")
-    fp.repartition(col("_fp1"), col("_fp2"))
-      .sortWithinPartitions(col("_fp1"), col("_fp2"))
-      .mapPartitions { it =>
-        var h1 = 0L; var h2 = 0L; var first = true
-        it.filter { r =>
-          val keep = first || r.getLong(i1) != h1 || r.getLong(i2) != h2
-          if (keep) { h1 = r.getLong(i1); h2 = r.getLong(i2); first = false }
-          keep
-        }
-      }(org.apache.spark.sql.Encoders.row(schema))
-      .drop((if (keepFp) Seq("_fp2") else Seq("_fp1", "_fp2")): _*)
-  }
-
-  /** Exact-duplicate event removal (S4). Dedup key = full payload
-    * fingerprint; the fingerprint keeps the shuffle key narrow while the
-    * row rides along. */
-  def dedupEvents(clips: DataFrame): DataFrame = dedupByFingerprint(clips)
-
-  /** Metadata-only deduplicated view: [[dedupHashedMeta]] over the
-    * [[hashPayload]] projection, so the exchange carries ~40 bytes/row
+  /** Metadata-only exact-duplicate removal (S4): [[dedupHashedMeta]] over
+    * the [[hashPayload]] projection, so the exchange carries ~40 bytes/row
     * instead of the multi-KB audio payload. All metadata rules (stats,
     * uniqueness, referential) run off this.
     *
-    * The `_fp1` fingerprint lane is KEPT on the output: it is a
-    * deterministic function of the FULL original row (payload included), is
-    * distinct across surviving rows by construction of the dedup, and so is
-    * the ideal uniqueness-salt source — unconditionally spread (even when a
-    * hot key's duplicates are metadata-identical) yet stable under task
-    * retry (see [[keyCounts]]). */
+    * The `_fp1` fingerprint is KEPT on the output: it is a deterministic
+    * function of the FULL original row (payload lanes included), and so is
+    * the ideal uniqueness-salt source — spread even when a hot key's
+    * duplicates are metadata-identical, yet stable under task retry (see
+    * [[keyCounts]]). */
   def dedupEventsMeta(clips: DataFrame): DataFrame = dedupHashedMeta(hashPayload(clips))
 
-  /** The metadata dedup over a [[hashPayload]] frame: the full-row
-    * fingerprint hashes the payload LANES instead of the multi-KB bytes, so
-    * over run()'s cached frame the dedup costs no payload scan at all. Rows
-    * identical in every column (payload included) get equal fingerprints;
-    * differing rows collide only in the 128-bit class the engine already
-    * accepts. */
+  /** The metadata dedup over a [[hashPayload]] frame: `dropDuplicates()`
+    * over EVERY column is an exact HashAggregate with no aggregate function
+    * (a subset key would add `first()` buffers over the string columns and
+    * fall back to SortAggregate), and over run()'s cached frame it reads no
+    * payload.
+    *
+    * The repartition on `_fp1` is the dedup's one shuffle. Without it, a
+    * store bucketed on clip_id already satisfies the aggregate's
+    * distribution, and its bucket count becomes the task count of every
+    * metadata stage and output append downstream (64 buckets: about +30%
+    * wall, +50% CPU per 32k-clip pass on 4 vCPUs). `_fp1` spreads by
+    * whole-row content, so no shared key or payload makes a hot reducer. */
   private def dedupHashedMeta(hm: DataFrame): DataFrame =
-    dedupByFingerprint(hm, keepFp = true).drop("_h1", "_h2")
+    hm.withColumn("_fp1", xxhash64((lit(1) +: hm.columns.map(col).toSeq): _*))
+      .repartition(col("_fp1"))
+      .dropDuplicates()
+      .drop("_h1", "_h2")
 
   /** The fused per-partition stats pass: one salted two-phase aggregation
     * for ALL stats rules. Returns one row per partition value with a column
@@ -187,8 +153,8 @@ object ValidationEngine {
         p1 += hll_sketch_agg(col(c)).as(s"hll_$c")
         p2 += hll_sketch_estimate(hll_union_agg(col(s"hll_$c"))).as(s"dv_$c")
       case Drift(c, _, k) =>
-        p1 += kll_sketch_agg(col(c).cast("double"), k).as(s"kll_$c")
-        p2 += kll_merge_agg(col(s"kll_$c"), k).as(s"kll_$c")
+        p1 += kll_sketch_agg_double(col(c).cast("double"), k).as(s"kll_$c")
+        p2 += kll_merge_agg_double(col(s"kll_$c"), k).as(s"kll_$c")
       case _ => // uniqueness/referential/pcm run as their own (join) jobs
     }
     events
@@ -282,8 +248,8 @@ object ValidationEngine {
     * cache-eviction retries and can route rows to different reducers than
     * the original attempt, losing or double-counting per-(key,salt)
     * partials. The full-row fingerprint `_fp1` (kept by [[dedupEventsMeta]])
-    * satisfies both: it covers the payload (distinct across post-dedup rows
-    * even when visible metadata is identical) and is a pure function of row
+    * satisfies both: it covers the payload lanes (differs across post-dedup
+    * rows even when visible metadata is identical) and is a pure function of row
     * content. Inputs without it fall back to hashing every visible column —
     * still deterministic, spread whenever rows differ anywhere. A NULL key
     * is a group of its own, so duplicated NULL keys still surface. */
@@ -364,7 +330,7 @@ object ValidationEngine {
       hashedCur: Option[DataFrame], hashedBase: Option[DataFrame]): DataFrame = {
     if (cfg.fullDecodeVerify) return classifyFullDecode(events, baseline, cfg, rule.minSnrDb)
     // cur side: either the shared pre-hashed narrow frame (run() computes
-    // it in ONE payload scan that also feeds the dedup fingerprint), or an
+    // it in ONE payload scan that also feeds the metadata dedup), or an
     // inline hash projection consumed exactly ONCE by the diff join.
     // Suspect payloads are re-fetched from the raw tables below, not from
     // here.
@@ -449,12 +415,22 @@ object ValidationEngine {
       .drop("_bb", "_bt")
   }
 
+  /** Kolmogorov–Smirnov distance between two DataSketches `KllDoublesSketch`
+    * images — what Spark's `kll_sketch_agg_double` emits and what older runs
+    * stored in `baseline_stats` — or 0 when either side is empty: an empty
+    * partition cannot evidence drift. */
+  private[graft] def ksDelta(a: Array[Byte], b: Array[Byte]): Double = {
+    val sa = KllDoublesSketch.heapify(Memory.wrap(a))
+    val sb = KllDoublesSketch.heapify(Memory.wrap(b))
+    if (sa.isEmpty || sb.isEmpty) 0.0 else KolmogorovSmirnov.computeKSDelta(sa, sb)
+  }
+
   /** Drift: KS distance between current and baseline KLL sketches per
     * partition. One violation row per drifted partition. */
   def driftViolations(curStats: DataFrame, baseStats: DataFrame, rule: Drift,
       cfg: EngineConfig): DataFrame = {
     val ks = udf((a: Array[Byte], b: Array[Byte]) =>
-      if (a == null || b == null) 0.0 else KllSketchAgg.ksDelta(a, b))
+      if (a == null || b == null) 0.0 else ksDelta(a, b))
     val c = rule.column
     curStats.select(col(PV), col(s"kll_$c").as("_cur"))
       .join(baseStats.select(col(PV), col(s"kll_$c").as("_base")), Seq(PV), "left_outer")
@@ -491,7 +467,7 @@ object ValidationEngine {
 
     // ---- ONE payload scan for the whole run (hash-first mode): the
     // 128-bit payload-hash lanes computed here feed BOTH the pcm diff
-    // join's cur side and the metadata dedup fingerprint, which previously
+    // join's cur side and the metadata dedup, which previously
     // each scanned + hashed every multi-KB payload themselves — the single
     // heaviest duplicated work in the run. Materialized SYNCHRONOUSLY
     // (one count job) before the branch fan-out: the pcm future and the

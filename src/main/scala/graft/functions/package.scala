@@ -6,10 +6,6 @@ package graft
   * Spark-native extension libraries. User code imports `graft.functions._`.
   */
 package object functions {
-  type KllSketchAgg = org.apache.spark.sql.graft.KllSketchAgg
-  val KllSketchAgg = org.apache.spark.sql.graft.KllSketchAgg
-  type KllMergeAgg = org.apache.spark.sql.graft.KllMergeAgg
-  val KllMergeAgg = org.apache.spark.sql.graft.KllMergeAgg
   type PcmSnr = org.apache.spark.sql.graft.PcmSnr
   type PcmAllclose = org.apache.spark.sql.graft.PcmAllclose
   val PcmFunctions = org.apache.spark.sql.graft.PcmFunctions

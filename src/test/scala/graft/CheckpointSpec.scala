@@ -364,6 +364,20 @@ class CheckpointSpec extends AnyFunSuite {
     assert(!colocated("clip_id", 8))
   }
 
+  test("metadata dedup over a clustered store shuffles on its fingerprint, not the bucket layout") {
+    val root = Files.createTempDirectory("graft-clustered-dedup").toString
+    val store = new SnapshotStore(s"$root/state")
+    val n = 2000L
+    store.appendClustered("clips", ClipSynth.clips(spark, n).toDF(), "clip_id", 16)
+    val meta = graft.engine.ValidationEngine.dedupEventsMeta(store.read(spark, "clips"))
+    // clip_id buckets already satisfy a group-by over every column; the
+    // dedup must still shuffle, or 16 buckets become 16 tasks per stage
+    // of every metadata branch downstream
+    val plan = meta.queryExecution.executedPlan.toString
+    assert(plan.contains("Exchange hashpartitioning(_fp1"), plan)
+    assert(meta.count() == TestOracle.expected(n.toInt).events.size)
+  }
+
   test("runResumable: clustered corpus yields outcomes identical to unclustered") {
     val n = 2500L
     def outputs(clustered: Boolean): (Seq[String], Seq[String]) = {

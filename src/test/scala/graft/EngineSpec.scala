@@ -92,7 +92,7 @@ class EngineSpec extends AnyFunSuite {
     val clips = ClipSynth.clips(spark, 1000).toDF()
     val baseline = ClipSynth.baseline(spark, 1000).toDF()
     def outcomes(cfg: EngineConfig) = ValidationEngine
-      .classifyAgainstBaseline(ValidationEngine.dedupEvents(clips), baseline, cfg)
+      .classifyAgainstBaseline(clips.dropDuplicates(), baseline, cfg)
       .groupBy("outcome").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(outcomes(EngineConfig(fullDecodeVerify = true)) ==
@@ -184,17 +184,29 @@ class EngineSpec extends AnyFunSuite {
     // the two join sides re-evaluated ids over a reordered input; the
     // single-pass dedup must be immune to upstream order
     val clips = ClipSynth.clips(spark, 2000).toDF().orderBy(rand(7)).repartition(11)
-    val deduped = ValidationEngine.dedupEvents(clips)
+    val deduped = ValidationEngine.dedupEventsMeta(clips)
     assert(deduped.count() == TestOracle.expected(2000).events.size)
     // survivors are exactly the distinct full rows
     assert(deduped.distinct().count() == deduped.count())
+  }
+
+  test("dedup: rows differing only in bytes stay distinct, fully equal rows collapse") {
+    import spark.implicits._
+    val df = Seq("p1", "p1", "p1", "p2").map(p => ("c1", "t", 300, 8000, "pcm_s16le", p))
+      .toDF("clip_id", "transcript", "dur_ms", "sr_hz", "codec", "payload")
+      .withColumn("bytes", encode(col("payload"), "UTF-8")).drop("payload")
+    val meta = ValidationEngine.dedupEventsMeta(df)
+    assert(meta.count() == 2)
+    // one survivor per payload: the kept fingerprint still tells them apart
+    assert(meta.select("_fp1").distinct().count() == 2)
+    assert(meta.columns.toSeq == df.columns.filterNot(_ == "bytes").toSeq :+ "_fp1")
   }
 
   test("classification is invariant under repartitioning (determinism)") {
     val clips = ClipSynth.clips(spark, 1000).toDF().repartition(7)
     val baseline = ClipSynth.baseline(spark, 1000).toDF().repartition(3)
     val out = ValidationEngine
-      .classifyAgainstBaseline(ValidationEngine.dedupEvents(clips), baseline, EngineConfig())
+      .classifyAgainstBaseline(clips.dropDuplicates(), baseline, EngineConfig())
       .groupBy("outcome").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val exp1k = TestOracle.expected(1000)

@@ -1,7 +1,10 @@
 package graft
 
+import graft.engine.ValidationEngine
 import graft.ops.{AnnOps, DedupOps, RelationalOps, TextOps}
 import graft.multimodal.Multimodal
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.graft.TextExpressions.{fingerprint64, simhash64}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -288,21 +291,56 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("sketch merge associativity: KLL sketch == merged partials") {
-    import graft.functions.KllSketchAgg
-    import org.apache.spark.sql.graft.KllSketchAgg.kll_sketch_agg
-    import org.apache.spark.sql.graft.KllMergeAgg.kll_merge_agg
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val single = li.agg(kll_sketch_agg(col("l_quantity"))).collect()(0).getAs[Array[Byte]](0)
+    val q = col("l_quantity").cast("double")
+    val single = li.agg(kll_sketch_agg_double(q)).collect()(0).getAs[Array[Byte]](0)
     val merged = li
       .groupBy(pmod(col("l_orderkey"), lit(13)))
-      .agg(kll_sketch_agg(col("l_quantity")).as("s"))
-      .agg(kll_merge_agg(col("s"))).collect()(0).getAs[Array[Byte]](0)
+      .agg(kll_sketch_agg_double(q).as("s"))
+      .agg(kll_merge_agg_double(col("s"))).collect()(0).getAs[Array[Byte]](0)
     // same data through different partial/merge paths → same quantile estimates
-    for (q <- Seq(0.1, 0.5, 0.9)) {
-      val a = KllSketchAgg.quantile(single, q)
-      val b = KllSketchAgg.quantile(merged, q)
-      assert(math.abs(a - b) <= math.max(1.0, 0.05 * math.abs(a)), s"q=$q: $a vs $b")
+    for (r <- Seq(0.1, 0.5, 0.9)) {
+      val a = kll(single).getQuantile(r)
+      val b = kll(merged).getQuantile(r)
+      assert(math.abs(a - b) <= math.max(1.0, 0.05 * math.abs(a)), s"q=$r: $a vs $b")
     }
-    assert(KllSketchAgg.ksDelta(single, merged) < 0.05)
+    assert(ValidationEngine.ksDelta(single, merged) < 0.05)
   }
+
+  test("stored KllDoublesSketch images merge through kll_merge_agg_double and read via ksDelta") {
+    import spark.implicits._
+    // `baseline_stats` rows written by earlier runs hold plain
+    // `KllDoublesSketch.toByteArray` images (k = 200); the built-in merge
+    // must accept them, empty ones included, and ksDelta must read the result
+    def image(vs: Iterable[Double]): Array[Byte] = {
+      val s = KllDoublesSketch.newHeapInstance(200)
+      vs.foreach(s.update)
+      s.toByteArray
+    }
+    val lo = image((0 until 3000).map(_.toDouble))
+    val hi = image((3000 until 6000).map(_.toDouble))
+    val merged = Seq(lo, hi, image(Nil)).toDF("s")
+      .agg(kll_merge_agg_double(col("s"))).collect()(0).getAs[Array[Byte]](0)
+    assert(kll(merged).getN == 6000)
+    val fresh = spark.range(6000).agg(kll_sketch_agg_double(col("id").cast("double")))
+      .collect()(0).getAs[Array[Byte]](0)
+    assert(ValidationEngine.ksDelta(merged, fresh) < 0.05)
+    assert(ValidationEngine.ksDelta(merged, lo) > 0.4) // half the mass is above lo's range
+    assert(ValidationEngine.ksDelta(merged, image(Nil)) == 0.0) // empty side: no evidence
+  }
+
+  test("cap-marker guard: an a == b row fails the query, a clean frame passes unchanged") {
+    import spark.implicits._
+    val clean = Seq((1L, 2L, 0.5), (1L, 3L, 0.9)).toDF("a", "b", "sim")
+    val guarded = SparkEntry.failOnCapMarker(clean, "q21")
+    assert(guarded.columns.toSeq == clean.columns.toSeq)
+    assert(guarded.collect().toSeq == clean.collect().toSeq)
+    val marked = clean.union(Seq((7L, 7L, 1.0)).toDF("a", "b", "sim"))
+    val e = intercept[Exception](SparkEntry.failOnCapMarker(marked, "q21").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("q21: dedup cap exceeded")), e.toString)
+  }
+
+  private def kll(image: Array[Byte]): KllDoublesSketch =
+    KllDoublesSketch.heapify(Memory.wrap(image))
 }
