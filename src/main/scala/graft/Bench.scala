@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): runs every contract query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds. A
   * query whose every draw threw is listed under "failed" instead of timed,
-  * and the process then exits with status 1. */
+  * with its last exception's class and message under "errors", and the
+  * process then exits with status 1. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -60,18 +61,18 @@ object Bench {
     // number flags that even the per-query gate may not have saved it.
     println(report(results, stealNow() - steal0, redraws, sfDir))
     spark.stop()
-    if (results.exists(_._2.isEmpty)) sys.exit(1)
+    if (results.exists(_._2.isLeft)) sys.exit(1)
   }
 
-  /** One draw of `run`: its wall seconds — none when it threw, so a
+  /** One draw of `run`: its wall seconds, or the exception it threw — so a
     * failure can never read as a fast time — and the host steal jiffies
     * (`steal`) that accrued meanwhile. */
-  def draw(name: String, steal: () => Long)(run: => Unit): (Option[Double], Long) = {
+  def draw(name: String, steal: () => Long)(run: => Unit): (Either[Throwable, Double], Long) = {
     val s0 = steal(); val t0 = System.nanoTime()
-    val secs = try { run; Some((System.nanoTime() - t0) / 1e9) } catch {
+    val secs = try { run; Right((System.nanoTime() - t0) / 1e9) } catch {
       case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        None
+        Left(e)
     }
     (secs, steal() - s0)
   }
@@ -79,22 +80,38 @@ object Bench {
   /** `reps` draws of one query, plus up to two redraws while every draw so
     * far was stormy (more than `cleanJ` steal jiffies). Returns the min of
     * the clean successful draws when any exist, else of all successful
-    * draws — none when no draw succeeded — and the number of redraws. */
-  def bestDraw(reps: Int, cleanJ: Long)(draw: () => (Option[Double], Long)): (Option[Double], Int) = {
+    * draws — the last draw's exception when none succeeded — and the
+    * number of redraws. */
+  def bestDraw(reps: Int, cleanJ: Long)(
+      draw: () => (Either[Throwable, Double], Long)): (Either[Throwable, Double], Int) = {
     var draws = (1 to reps).map(_ => draw())
     while (draws.forall(_._2 > cleanJ) && draws.size < reps + 2) draws = draws :+ draw()
-    val ok = draws.collect { case (Some(t), j) => (t, j) }
+    val ok = draws.collect { case (Right(t), j) => (t, j) }
     val clean = ok.filter(_._2 <= cleanJ)
-    ((if (clean.nonEmpty) clean else ok).map(_._1).minOption, draws.size - reps)
+    val best = (if (clean.nonEmpty) clean else ok).map(_._1).minOption
+    (best.toRight(draws.collect { case (Left(e), _) => e }.last), draws.size - reps)
   }
 
   /** The bench's JSON line: timed queries under "queries" and summed in
-    * "total"; queries without one successful draw only under "failed". */
-  def report(results: Seq[(String, Option[Double])], stealJ: Long, redraws: Int,
+    * "total"; queries without one successful draw only under "failed",
+    * and their exception class and message under "errors". */
+  def report(results: Seq[(String, Either[Throwable, Double])], stealJ: Long, redraws: Int,
       sfDir: String): String = {
-    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val timed = results.collect { case (k, Right(v)) => k -> v }
     val qs = timed.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, None) => s""""$k"""" }.mkString("[", ",", "]")
-    f"""{"metric":"total","value":${timed.map(_._2).sum}%.3f,"unit":"sec","queries":$qs,"failed":$failed,"steal_core_s":${stealJ / 100.0}%.1f,"redraws":$redraws,"sf":"$sfDir"}"""
+    val errs = results.collect { case (k, Left(e)) => k -> e }
+    val failed = errs.map { case (k, _) => s""""$k"""" }.mkString("[", ",", "]")
+    val errors = errs.map { case (k, e) =>
+      s""""$k":{"class":${json(e.getClass.getName)},"message":${json(String.valueOf(e.getMessage))}}"""
+    }.mkString("{", ",", "}")
+    f"""{"metric":"total","value":${timed.map(_._2).sum}%.3f,"unit":"sec","queries":$qs,"failed":$failed,"errors":$errors,"steal_core_s":${stealJ / 100.0}%.1f,"redraws":$redraws,"sf":"$sfDir"}"""
   }
+
+  /** `s` as a JSON string literal. */
+  private def json(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -68,11 +68,13 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
         }
       }
     stored.orElse {
+      // one sketch row per partition value: one partition, so one file
       outStore.append(BaselineStatsTable,
         ValidationEngine.statsPass(store.read(spark, "baseline_clips"), driftRules, cfg)
           .withColumn("base_snapshot_id", lit(baseSnap))
           .withColumn("gen_id", lit(System.nanoTime()))
-          .withColumn("sketch_cols", array(needed.map(lit): _*)))
+          .withColumn("sketch_cols", array(needed.map(lit): _*))
+          .coalesce(1))
       stored // single source of truth: read back what the store committed
     }
   }
@@ -194,6 +196,7 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
         lit(m.shuffleWriteBytes).as("shuffle_write_bytes"),
         lit(m.executorRunTimeMs).as("executor_run_ms"),
         lit(m.spilledBytes).as("spilled_bytes"))
+      .coalesce(1) // one row per partition value: one file
     JobScope(sc, "append-lineage") { outStore.append(LineageTable, lineage) }
     report.unpersist()
     outStore.read(spark, LineageTable).filter(col("snapshot_id") === snapshotId)

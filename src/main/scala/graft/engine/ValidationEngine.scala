@@ -9,15 +9,18 @@ import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.KolmogorovSmirnov
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
-/** Execution config. `saltBuckets` drives the two-phase salted aggregation
-  * on the hot partition key (≈80% of rows share codec=pcm_s16le — see
-  * ClipSynth); `broadcastThresholdBytes` drives explicit broadcast-vs-
-  * shuffle join selection by estimated side size (north rule). The
-  * partition column is fixed (`codec`) and the SNR threshold comes from
-  * the [[graft.rules.PcmEquality]] rule. */
+/** Execution config. `saltBuckets` is the phase-1 salt width of the
+  * uniqueness key count ([[ValidationEngine.keyCounts]]), which spreads a
+  * hot key over that many reducers; `broadcastThresholdBytes` drives
+  * explicit broadcast-vs-shuffle join selection by estimated side size
+  * (north rule). The partition column is fixed (`codec`), the SNR
+  * threshold comes from the [[graft.rules.PcmEquality]] rule, and output
+  * frames are sized by Spark's own
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
 final case class EngineConfig(
     saltBuckets: Int = 16,
     broadcastThresholdBytes: Long = 10L << 20,
@@ -58,15 +61,18 @@ final case class ValidationReport(
   *
   *   1. input dedup (S4, RabbitMqConsumerService.java:27)  — exact
   *      duplicate events dropped BEFORE any rule sees them;
-  *   2. ONE fused, salted two-phase aggregation computes every stats rule
-  *      (null rate, min/max, HLL distinct, KLL drift sketch) per partition
-  *      — the analog of the reference's single pass over the batch;
+  *   2. ONE fused aggregation (map-side partials, one exchange) computes
+  *      every stats rule (null rate, min/max, HLL distinct, KLL drift
+  *      sketch) per partition — the analog of the reference's single pass
+  *      over the batch;
   *   3. uniqueness = salted two-phase count on the natural key (S5,
   *      SourceSystemDataCheckerService.java:42-45);
   *   4. referential = left-anti joins both directions (J4);
   *   5. pcm_equality = left-outer diff join vs baseline + 3-way classify
   *      (J2/J3, SourceSystemDataCheckerService.java:116-154);
-  *   6. verdict/violation routing (A1) + per-partition lineage (W1).
+  *   6. verdict/violation routing (A1) + per-partition lineage (W1), each
+  *      output sized to one partition (so one file) per advisory partition
+  *      size of its data.
   */
 object ValidationEngine {
 
@@ -74,13 +80,6 @@ object ValidationEngine {
 
   /** Verdicts, lineage and resume are keyed per codec. */
   private val PartitionCol = "codec"
-
-  /** Salt derived from the natural key: rows of the same hot *partition*
-    * spread over `saltBuckets` reducers in phase 1, then phase 2 merges the
-    * (few) per-salt partials per partition. All phase-1 aggregates used
-    * here are mergeable (sum/min/max/HLL-union/KLL-merge) by construction. */
-  private def saltCol(cfg: EngineConfig): Column =
-    pmod(xxhash64(col("clip_id")), lit(cfg.saltBuckets))
 
   /** `codec=<value>` (`codec=null` for a NULL codec): the partition value
     * that violations, the stats pass and the resume filter all key on. */
@@ -132,36 +131,31 @@ object ValidationEngine {
       .dropDuplicates()
       .drop("_h1", "_h2")
 
-  /** The fused per-partition stats pass: one salted two-phase aggregation
-    * for ALL stats rules. Returns one row per partition value with a column
-    * per statistic. */
+  /** The fused per-partition stats pass: ONE aggregation on the partition
+    * column for ALL stats rules, one row per partition value with a column
+    * per statistic. Every aggregate here (count/sum/min/max, HLL, KLL) has a
+    * map-side partial, so each map task ships one partial per partition
+    * value and the hot partition (≈80% of rows share codec=pcm_s16le, see
+    * ClipSynth) costs its reducer one merge per map task: a salt would only
+    * multiply the partials and add a second exchange. `cfg` is not read. */
   def statsPass(events: DataFrame, rules: Seq[Rule], cfg: EngineConfig): DataFrame = {
-    val p1 = scala.collection.mutable.ArrayBuffer[Column](count(lit(1)).as("n_rows"))
-    val p2 = scala.collection.mutable.ArrayBuffer[Column](sum("n_rows").as("n_rows"))
+    val aggs = scala.collection.mutable.ArrayBuffer[Column](count(lit(1)).as("n_rows"))
     rules.foreach {
       case NullRate(c, _) =>
-        p1 += sum(col(c).isNull.cast("long")).as(s"nulls_$c")
-        p2 += sum(s"nulls_$c").as(s"nulls_$c")
+        aggs += sum(col(c).isNull.cast("long")).as(s"nulls_$c")
       case MinMax(c, lo, hi) =>
-        p1 += sum((col(c) < lo || col(c) > hi).cast("long")).as(s"oob_$c")
-        p1 += min(col(c)).as(s"min_$c")
-        p1 += max(col(c)).as(s"max_$c")
-        p2 += sum(s"oob_$c").as(s"oob_$c")
-        p2 += min(s"min_$c").as(s"min_$c")
-        p2 += max(s"max_$c").as(s"max_$c")
+        aggs += sum((col(c) < lo || col(c) > hi).cast("long")).as(s"oob_$c")
+        aggs += min(col(c)).as(s"min_$c")
+        aggs += max(col(c)).as(s"max_$c")
       case ApproxDistinct(c, _) =>
-        p1 += hll_sketch_agg(col(c)).as(s"hll_$c")
-        p2 += hll_sketch_estimate(hll_union_agg(col(s"hll_$c"))).as(s"dv_$c")
+        aggs += hll_sketch_estimate(hll_sketch_agg(col(c))).as(s"dv_$c")
       case Drift(c, _, k) =>
-        p1 += kll_sketch_agg_double(col(c).cast("double"), k).as(s"kll_$c")
-        p2 += kll_merge_agg_double(col(s"kll_$c"), k).as(s"kll_$c")
+        aggs += kll_sketch_agg_double(col(c).cast("double"), k).as(s"kll_$c")
       case _ => // uniqueness/referential/pcm run as their own (join) jobs
     }
     events
-      .groupBy(col(PartitionCol), saltCol(cfg).as("_salt"))
-      .agg(p1.head, p1.tail.toSeq: _*)
       .groupBy(col(PartitionCol))
-      .agg(p2.head, p2.tail.toSeq: _*)
+      .agg(aggs.head, aggs.tail.toSeq: _*)
       .withColumn(PV, pvCol)
   }
 
@@ -252,7 +246,11 @@ object ValidationEngine {
     * rows even when visible metadata is identical) and is a pure function of row
     * content. Inputs without it fall back to hashing every visible column —
     * still deterministic, spread whenever rows differ anywhere. A NULL key
-    * is a group of its own, so duplicated NULL keys still surface. */
+    * is a group of its own, so duplicated NULL keys still surface.
+    *
+    * Unlike [[statsPass]], this aggregation keeps its salt: on near-unique
+    * keys Spark may skip the map-side partial aggregation, and then the
+    * salt is what spreads a hot key's rows. */
   def keyCounts(events: DataFrame, keyCol: String, cfg: EngineConfig,
       pvOrdinals: Map[String, Int]): DataFrame = {
     val saltSrc: Column =
@@ -442,6 +440,22 @@ object ValidationEngine {
   }
 
   // --------------------------------------------------------------- driver
+
+  /** `df` narrowed to one partition per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by default)
+    * of `bytes`, at least one, so its write leaves one file per advisory
+    * share of data instead of one per upstream partition. `coalesce` adds
+    * no shuffle and never raises the partition count. */
+  private def sizedTo(df: DataFrame, bytes: BigInt): DataFrame = {
+    val target = df.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    df.coalesce(((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt)
+  }
+
+  /** What a persisted frame holds in the cache once every partition is
+    * materialized (before that: the plan estimate). A fresh projection is
+    * planned against the cache, so its estimate is the cached size. */
+  private def cachedBytes(df: DataFrame): BigInt =
+    df.select("*").queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Compile + evaluate the rule pack. The violations DataFrame is computed
     * and persisted inside this call (the verdict grid needs its counts);
@@ -643,9 +657,14 @@ object ValidationEngine {
     val verdictSchema = StructType.fromDDL("partition_values STRING NOT NULL, " +
       "rule_id STRING NOT NULL, pass BOOLEAN NOT NULL, violation_count BIGINT NOT NULL")
 
+    // Sized from the materialized caches of the counted branches, not from
+    // `allViolations`' plan: its fold starts at the RDD-backed empty frame,
+    // whose estimate is spark.sql.defaultSizeInBytes. The grid holds one
+    // row per (partition, rule), so it is one partition.
+    val violationBytes = (pcmUnion.toSeq ++ metaBranchesP).map(cachedBytes).sum
     ValidationReport(
-      verdicts = spark.createDataFrame(verdictRows, verdictSchema),
-      violations = allViolations.drop(PV),
+      verdicts = spark.createDataFrame(verdictRows, verdictSchema).coalesce(1),
+      violations = sizedTo(allViolations.drop(PV), violationBytes),
       cached = Seq(eventsMeta, stats) ++ pcmUnion.toSeq ++ metaBranchesP ++ extraCaches.toSeq)
   }
 }

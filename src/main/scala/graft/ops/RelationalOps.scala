@@ -54,17 +54,16 @@ object RelationalOps {
       keyCols: Seq[String], payloadCols: Seq[String],
       incomingRel: DataFrame, baselineRel: DataFrame, relCol: String): DataFrame = {
     // The child-key SET is compared via an order-insensitive signature —
-    // (distinct count, XOR of 64-bit value hashes) — instead of a
-    // materialized sorted array: `collect_set` is a TypedImperative
-    // aggregate (ObjectHashAggregate, sort-based past the 128-key fallback
-    // threshold) whose partial set buffers ride the aggregation exchange on
-    // each side, while the
-    // signature stays in fixed-width whole-stage-codegen HashAggregates end
-    // to end. Sets are equal ⇔ signatures are equal, up to an engineered
-    // 64-bit hash-XOR collision (the same collision class as the engine's
-    // content fingerprints); null child keys are excluded exactly as
-    // collect_set dropped them, and a missing set normalizes to (0, 0) as
-    // the empty array did.
+    // (distinct count, XOR of [[setLanes]]' two 64-bit value hashes) —
+    // instead of a materialized sorted array: `collect_set` is a
+    // TypedImperative aggregate (ObjectHashAggregate, sort-based past the
+    // 128-key fallback threshold) whose partial set buffers ride the
+    // aggregation exchange on each side, while the signature stays in
+    // fixed-width whole-stage-codegen HashAggregates end to end. Sets are
+    // equal ⇔ signatures are equal, up to a collision in BOTH XOR lanes at
+    // once; null child keys are excluded exactly as collect_set dropped
+    // them, and a missing set normalizes to (0, 0, 0) as the empty array did.
+    val sigCols = Seq("_rel_n", "_rel_h0", "_rel_h1")
     def withSig(df: DataFrame, rel: DataFrame): DataFrame = {
       // ONE exchange for both aggregation levels: hash-partitioning by the
       // parent key alone already clusters (key, value) — Catalyst accepts a
@@ -76,15 +75,22 @@ object RelationalOps {
         .repartition(keyCols.map(col): _*)
         .distinct()
         .groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("_rel_n"), bit_xor(xxhash64(col("_rv"))).as("_rel_h"))
-      df.join(sigs, keyCols, "left_outer")
-        .withColumn("_rel_n", coalesce(col("_rel_n"), lit(0L)))
-        .withColumn("_rel_h", coalesce(col("_rel_h"), lit(0L)))
+        .agg(count(lit(1)).as("_rel_n"),
+          setLanes(col("_rv")).zipWithIndex.map { case (h, i) => bit_xor(h).as(s"_rel_h$i") }: _*)
+      sigCols.foldLeft(df.join(sigs, keyCols, "left_outer"))(
+        (d, c) => d.withColumn(c, coalesce(col(c), lit(0L))))
     }
     diffClassify(withSig(incoming, incomingRel), withSig(baseline, baselineRel),
-        keyCols, payloadCols ++ Seq("_rel_n", "_rel_h"))
-      .drop("_rel_n", "_rel_h")
+        keyCols, payloadCols ++ sigCols)
+      .drop(sigCols: _*)
   }
+
+  /** The two 64-bit hash lanes of a set signature: xxhash64 under its
+    * default seed, and under the independent seed xxhash64(7). XOR is
+    * linear, so ~65 values suffice to craft two equal-size sets whose
+    * one-lane XORs collide (OpsSpec does); both lanes must collide to
+    * equate two different sets. */
+  private def setLanes(v: Column): Seq[Column] = Seq(xxhash64(v), xxhash64(lit(7), v))
 
   /** Nested two-level diff routing (J5, the reference's
     * `filterChangedAndNewMedia` over unchanged specimens,
@@ -122,19 +128,22 @@ object RelationalOps {
   def setEqualityByKey(df: DataFrame, keyCol: String, valueCol: String,
       condA: Column, condB: Column): DataFrame = {
     // Set equality via order-insensitive signatures — per side, (distinct
-    // non-null value count, XOR of 64-bit value hashes) — instead of two
-    // materialized sorted `collect_set` arrays: collect_set is a
-    // TypedImperative aggregate (ObjectHashAggregate, sort-based past the
-    // 128-key fallback threshold) whose partial set buffers ride the
-    // aggregation exchange,
-    // while the signature plan is fixed-width whole-stage-codegen
-    // HashAggregate end to end. Phase 1 flags each (key, value) group's
-    // side membership; phase 2 counts/hash-XORs the flags. Sets are equal
-    // ⇔ counts AND hash-XORs match (up to an engineered 64-bit hash-XOR
-    // collision, the collision class the engine's fingerprints accept);
-    // null values are excluded exactly as collect_set dropped them.
+    // non-null value count, XOR of [[setLanes]]' two 64-bit value hashes)
+    // — instead of two materialized sorted `collect_set` arrays:
+    // collect_set is a TypedImperative aggregate (ObjectHashAggregate,
+    // sort-based past the 128-key fallback threshold) whose partial set
+    // buffers ride the aggregation exchange, while the signature plan is
+    // fixed-width whole-stage-codegen HashAggregate end to end. Phase 1
+    // flags each (key, value) group's side membership; phase 2
+    // counts/hash-XORs the flags. Sets are equal ⇔ counts AND both XOR
+    // lanes match (up to a collision in both lanes at once); null values
+    // are excluded exactly as collect_set dropped them.
     val inA = max(when(condA && col(valueCol).isNotNull, 1).otherwise(0))
     val inB = max(when(condB && col(valueCol).isNotNull, 1).otherwise(0))
+    // `<flag>_h<i>`: lane i's XOR over the values flagged into one side
+    def xorLanes(flag: String): Seq[Column] = setLanes(col("_v")).zipWithIndex.map {
+      case (h, i) => bit_xor(when(col(flag) === 1, h).otherwise(lit(0L))).as(s"${flag}_h$i")
+    }
     // one exchange for both levels: partitioning by the key alone clusters
     // (key, value) too, so the flag aggregation and the per-key rollup both
     // run on the same hash partitioning
@@ -144,17 +153,15 @@ object RelationalOps {
       .groupBy(col(keyCol))
       .agg(
         sum(col("_fa")).cast("int").as("n_a"),
-        sum(col("_fb")).cast("int").as("n_b"),
-        bit_xor(when(col("_fa") === 1, xxhash64(col("_v"))).otherwise(lit(0L))).as("_ha"),
-        bit_xor(when(col("_fb") === 1, xxhash64(col("_v"))).otherwise(lit(0L))).as("_hb"))
+        (sum(col("_fb")).cast("int").as("n_b") +: (xorLanes("_fa") ++ xorLanes("_fb"))): _*)
       // the aggregates are never null (every key has ≥1 group row); the
       // coalesces only restore the non-nullable schema the size()/===
       // formulation had
       .select(col(keyCol),
         coalesce(col("n_a"), lit(0)).as("n_a"),
         coalesce(col("n_b"), lit(0)).as("n_b"),
-        coalesce(col("n_a") === col("n_b") && col("_ha") === col("_hb"), lit(false))
-          .as("sets_equal"))
+        coalesce(col("n_a") === col("n_b") && col("_fa_h0") === col("_fb_h0") &&
+          col("_fa_h1") === col("_fb_h1"), lit(false)).as("sets_equal"))
   }
 
   /** Compound-key state lookup with semi-join scope reduction (L1/L2): the

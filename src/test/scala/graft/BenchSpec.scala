@@ -12,12 +12,19 @@ class BenchSpec extends AnyFunSuite {
     val (best, redraws) = Bench.bestDraw(reps = 2, cleanJ = 200) { () =>
       Bench.draw("q_throws", calm) { calls += 1; throw new IllegalStateException("boom") }
     }
-    assert(best.isEmpty && redraws == 0 && calls == 2)
+    assert(best.isLeft && redraws == 0 && calls == 2)
 
-    val line = Bench.report(Seq("q_ok" -> Some(1.5), "q_throws" -> best), 0L, redraws, "sf")
+    val line = Bench.report(Seq("q_ok" -> Right(1.5), "q_throws" -> best), 0L, redraws, "sf")
     assert(line.contains(""""queries":{"q_ok":1.500}"""))
     assert(line.contains(""""failed":["q_throws"]"""))
     assert(line.contains(""""value":1.500"""))
+    assert(line.contains(
+      """"errors":{"q_throws":{"class":"java.lang.IllegalStateException","message":"boom"}}"""))
+
+    // the message is a JSON string even when it holds quotes and line breaks
+    val odd = Bench.report(Seq("q_odd" -> Left(new RuntimeException("no \"x\"\nat y"))), 0L, 0, "sf")
+    assert(odd.contains("\"q_odd\":{\"class\":\"java.lang.RuntimeException\"," +
+      "\"message\":\"no \\\"x\\\"\\u000aat y\"}"))
   }
 
   test("only successful draws compete for the best time") {
@@ -26,12 +33,13 @@ class BenchSpec extends AnyFunSuite {
       val next = outcomes.next()
       Bench.draw("q_flaky", calm)(next())
     }
-    assert(best.isDefined)
-    assert(Bench.report(Seq("q_flaky" -> best), 0L, 0, "sf").contains(""""failed":[]"""))
+    assert(best.isRight)
+    val line = Bench.report(Seq("q_flaky" -> best), 0L, 0, "sf")
+    assert(line.contains(""""failed":[],"errors":{}"""))
   }
 
   test("stormy draws are redrawn, and a clean draw beats a faster stormy one") {
-    val draws = Iterator((Some(1.0), 500L), (Some(2.0), 500L), (Some(3.0), 10L))
+    val draws = Iterator((Right(1.0), 500L), (Right(2.0), 500L), (Right(3.0), 10L))
     val (best, redraws) = Bench.bestDraw(reps = 2, cleanJ = 200)(() => draws.next())
     assert(best.contains(3.0) && redraws == 1)
   }

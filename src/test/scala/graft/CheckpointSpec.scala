@@ -3,9 +3,11 @@ package graft
 import graft.engine.{CheckpointedRunner, EngineConfig, SnapshotStore}
 import graft.rules.Rule
 import graft.synth.ClipSynth
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Resume/lineage semantics (reference analog: `last_checked` bookkeeping,
   * SpecimenRepository.java:35-40) and snapshot-store behavior. */
@@ -376,6 +378,67 @@ class CheckpointSpec extends AnyFunSuite {
     val plan = meta.queryExecution.executedPlan.toString
     assert(plan.contains("Exchange hashpartitioning(_fp1"), plan)
     assert(meta.count() == TestOracle.expected(n.toInt).events.size)
+  }
+
+  /** One `runResumable` of the standard pack over 2000 clips into a fresh
+    * out-store, with `spark.sql.adaptive.advisoryPartitionSizeInBytes` set
+    * to `advisory` ("1b" keeps every upstream partition: the un-sized
+    * output). Returns the out-store's root directory. */
+  private def sizedRun(advisory: String, emptyBaseline: Boolean): String = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val root = Files.createTempDirectory(s"graft-sized-$advisory").toString
+    val store = new SnapshotStore(s"$root/state")
+    val n = 2000L
+    val base = ClipSynth.baseline(spark, n).toDF()
+    store.append("baseline_clips", if (emptyBaseline) base.limit(0) else base)
+    store.append("transcripts", ClipSynth.transcripts(spark, n).toDF())
+    val snap = store.append("clips", ClipSynth.clips(spark, n).toDF())
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, advisory)
+      new CheckpointedRunner(store, new SnapshotStore(s"$root/out"))
+        .runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    s"$root/out"
+  }
+
+  private val outputTables = Seq("violations", "verdicts", "lineage", "baseline_stats")
+
+  /** `part-*` files in the table's first snapshot. */
+  private def partFiles(out: String, table: String): Int =
+    Files.list(Paths.get(out, table, "snap-0")).iterator().asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+
+  /** The table's first snapshot without its run id; a drift violation's
+    * KS estimate is normalized (KLL is insertion-order-sensitive in the
+    * third decimal). */
+  private def outputRows(out: String, table: String): DataFrame = {
+    val df = spark.read.parquet(Paths.get(out, table, "snap-0").toString).drop("run_id")
+    if (!df.columns.contains("observed")) df
+    else df.withColumn("observed",
+      when(col("rule_id").startsWith("drift:"), lit("drifted")).otherwise(col("observed")))
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("runResumable writes one part file per output snapshot at the default advisory size") {
+    val sized = sizedRun("64MB", emptyBaseline = false)
+    val unsized = sizedRun("1b", emptyBaseline = false)
+    outputTables.foreach(t => assert(partFiles(sized, t) == 1, t))
+    assert(partFiles(unsized, "violations") > 1, "the un-sized union has several partitions")
+    Seq("violations", "verdicts").foreach(t =>
+      assert(sameRows(outputRows(sized, t), outputRows(unsized, t)), t))
+  }
+
+  test("violations split by the advisory size, never beyond the un-sized partitions") {
+    // empty baseline: every clip is new, so the pcm branch alone holds
+    // ~2000 violation rows, ~150 KB in the cache
+    val sized = sizedRun("32k", emptyBaseline = true)
+    val unsized = sizedRun("1b", emptyBaseline = true)
+    val (files, unsizedFiles) = (partFiles(sized, "violations"), partFiles(unsized, "violations"))
+    assert(files > 1 && files <= unsizedFiles, s"sized $files, un-sized $unsizedFiles")
+    assert(sameRows(outputRows(sized, "violations"), outputRows(unsized, "violations")))
   }
 
   test("runResumable: clustered corpus yields outcomes identical to unclustered") {

@@ -145,6 +145,23 @@ class EngineSpec extends AnyFunSuite {
     assert(vHash.exists(_.contains("pcm_equality")) && gHash.nonEmpty)
   }
 
+  test("stats pass: one aggregation behind exactly one exchange, one row per partition") {
+    val clips = ClipSynth.clips(spark, N).toDF()
+    val stats = ValidationEngine.statsPass(clips, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    val plan = stats.queryExecution.executedPlan.toString
+    assert("""\bExchange\b""".r.findAllIn(plan).size == 1, plan)
+    assert(stats.columns.toSeq == Seq("codec", "n_rows", "nulls_sr_hz", "nulls_transcript",
+      "oob_dur_ms", "min_dur_ms", "max_dur_ms", "dv_sr_hz", "kll_dur_ms", "_pv"))
+    val rows = stats.collect().map(r => r.getAs[String]("_pv") -> r).toMap
+    val byCodec = clips.groupBy("codec").count().collect()
+      .map(r => s"codec=${r.getString(0)}" -> r.getLong(1)).toMap
+    assert(rows.map { case (pv, r) => pv -> r.getAs[Long]("n_rows") } == byCodec)
+    val durs = clips.groupBy("codec").agg(min("dur_ms"), max("dur_ms")).collect()
+      .map(r => s"codec=${r.getString(0)}" -> (r.getInt(1), r.getInt(2))).toMap
+    assert(rows.map { case (pv, r) =>
+      pv -> (r.getAs[Int]("min_dur_ms"), r.getAs[Int]("max_dur_ms")) } == durs)
+  }
+
   test("uniqueness salt: a 10^4-copy hot key spreads evenly and deterministically") {
     import spark.implicits._
     // 10^4 events share ONE clip_id with IDENTICAL metadata, differing only

@@ -281,6 +281,62 @@ class OpsSpec extends AnyFunSuite {
     assert(out == Map(1L -> true, 2L -> false, 3L -> false))
   }
 
+  /** Two disjoint, equal-size sets of strings whose xxhash64 values XOR to
+    * the same 64 bits: Gaussian elimination over GF(2) finds a dependent
+    * subset among 66 hashes, each extended by a parity bit so the subset
+    * has even size; its two halves then collide on (count, one XOR lane). */
+  private def oneLaneCollision(): (Seq[String], Seq[String]) = {
+    import spark.implicits._
+    val vs = (0 until 66).map(i => s"v$i")
+    val hs = vs.toDF("v").select(xxhash64(col("v"))).collect().map(_.getLong(0))
+    // leading bit -> (reduced vector with parity bit 64, source indices)
+    val basis = scala.collection.mutable.Map[Int, (BigInt, Set[Int])]()
+    val vec = (h: Long) => (BigInt(h) & ((BigInt(1) << 64) - 1)) | (BigInt(1) << 64)
+    val dependent = hs.indices.iterator.map { i =>
+      var (x, src) = (vec(hs(i)), Set(i))
+      while (x != 0 && basis.contains(x.bitLength - 1)) {
+        val (bx, bs) = basis(x.bitLength - 1)
+        x ^= bx; src = src.diff(bs) ++ bs.diff(src)
+      }
+      if (x != 0) basis(x.bitLength - 1) = (x, src)
+      (x, src)
+    }.collectFirst { case (x, src) if x == 0 => src.toSeq.sorted }.get
+    val (a, b) = dependent.splitAt(dependent.size / 2)
+    (a.map(vs), b.map(vs))
+  }
+
+  test("set signatures equal exact collect_set equality, crafted one-lane collision included") {
+    import spark.implicits._
+    val (ca, cb) = oneLaneCollision()
+    val xor = (s: Seq[String]) => s.toDF("v").agg(bit_xor(xxhash64(col("v")))).head().getLong(0)
+    assert(ca.size == cb.size && ca.toSet != cb.toSet && xor(ca) == xor(cb),
+      "the crafted pair must collide on (count, single XOR lane)")
+    // key 0: the crafted pair; keys 1..200: random sets over a small
+    // universe, so equal sets, additions and removals all occur
+    val rnd = new scala.util.Random(7)
+    def draw(): Seq[String] = Seq.fill(rnd.nextInt(5))(s"u${rnd.nextInt(6)}")
+    val sides = (0L, ca, cb) +: (1L to 200L).map { k =>
+      val a = draw(); (k, a, if (rnd.nextInt(3) == 0) a.reverse else draw())
+    }
+    val rows = sides.flatMap { case (k, a, b) =>
+      a.map(v => (k, v, "a")) ++ b.map(v => (k, v, "b")) :+ ((k, null: String, "a"))
+    }.toDF("k", "v", "side")
+    val exact = sides.map { case (k, a, b) => k -> (a.toSet == b.toSet) }.toMap
+    val viaSig = RelationalOps.setEqualityByKey(rows, "k", "v",
+        col("side") === "a", col("side") === "b")
+      .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
+    assert(viaSig == exact)
+    assert(!viaSig(0L) && exact.values.toSet == Set(true, false))
+
+    // the composed change predicate: payload equal, child-key sets per side
+    val parents = sides.map(_._1).toDF("k").withColumn("p", lit("x"))
+    val rel = (side: String) => rows.filter(col("side") === side).select("k", "v")
+    val unchanged = RelationalOps.diffClassifyWithRelSet(parents, parents, Seq("k"), Seq("p"),
+        rel("a"), rel("b"), "v")
+      .collect().map(r => r.getAs[Long]("k") -> (r.getAs[String]("outcome") == "unchanged")).toMap
+    assert(unchanged == exact)
+  }
+
   test("multimodal stub decode preserves byte counts through binary plumbing") {
     val media = docs.select(col("doc_id"), encode(col("text"), "UTF-8").as("b"))
     val feats = Multimodal.extractFeatures(spark, media, "doc_id", "b")
