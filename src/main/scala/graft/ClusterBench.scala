@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{CheckpointedRunner, EngineConfig, SnapshotStore}
+import graft.engine.{CheckpointedRunner, EngineConfig, RunTrace, SnapshotStore}
 import graft.rules.Rule
 import org.apache.spark.sql.SparkSession
 
@@ -16,6 +16,15 @@ import org.apache.spark.sql.SparkSession
   * Requires SPARK_HOME=/opt/spark (worker JVMs are launched from the
   * distribution) and the packaged jar (shipped to executors via
   * spark.jars). Emits one JSON line per measurement: cold + steady-state.
+  *
+  * Spark settings come at launch as `-Dspark.*` properties, which win over
+  * the session's own (see [[SparkProfile]]): `-Dspark.sql.shuffle.partitions`
+  * replaces the fixed 32, and `-Dspark.executor.extraJavaOptions` sizes the
+  * executor JVMs — on a real cluster each executor is container-capped to
+  * its core slice and JVM ergonomics (GC/JIT thread counts) follow, which
+  * e.g. `-XX:ActiveProcessorCount=1` reproduces on one bare box. The JSON
+  * line's `exec_opts` is the executor options the session ran with: the
+  * launch value, behind the module and IPv6 options Spark puts first.
   */
 object ClusterBench {
 
@@ -45,29 +54,13 @@ object ClusterBench {
   private def session(workers: Int, memMb: Int): SparkSession = {
     val jar = new java.io.File(
       "target/scala-2.13/sourcesystemdatacheckerspark_2.13-0.1.0.jar").getAbsolutePath
-    // Executor JVM sizing: on a real cluster each executor is container-
-    // capped to its core slice and JVM ergonomics (GC/JIT thread counts)
-    // follow; on one bare box every executor JVM would otherwise size its
-    // runtime for all 32 host cores. SPARK_GRAFT_EXEC_OPTS can pin e.g.
-    // -XX:ActiveProcessorCount=1 to reproduce the container behavior.
-    val execOpts = sys.env.get("SPARK_GRAFT_EXEC_OPTS").filter(_.nonEmpty)
-      .map("spark.executor.extraJavaOptions" -> _)
-    // extra session confs, ';'-separated k=v (e.g. a shuffle knob under test);
-    // malformed tokens (no '=') are skipped with a warning, not a crash
-    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty).toSeq
-      .flatMap(_.split(';')).flatMap { kv => kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => Some(k -> v)
-        case _ =>
-          System.err.println(s"[ClusterBench] ignoring malformed conf token: '$kv'")
-          None
-      }}
-    val s = SparkProfile.session(s"graft-cluster-$workers", Seq(
+    val s = SparkProfile.session(s"graft-cluster-$workers",
       "spark.master" -> s"local-cluster[$workers,$coresPerExec,$memMb]",
       // same fixed partitioning across cluster sizes: identical plan,
       // different executor count — the thing the north rule varies
-      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_PARTS", "32"),
+      "spark.sql.shuffle.partitions" -> "32",
       "spark.jars" -> jar,
-      "spark.executor.memory" -> s"${memMb}m") ++ execOpts ++ extra: _*)
+      "spark.executor.memory" -> s"${memMb}m")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -123,7 +116,7 @@ object ClusterBench {
     // SPARK_GRAFT_STAGEDUMP=1: the per-job/stage timeline on stderr — the
     // diagnostic view for "where does W8 burn 2x the task CPU of W2"
     if (sys.env.get("SPARK_GRAFT_STAGEDUMP").contains("1"))
-      JobTimeline.attach(spark.sparkContext, Some(System.err))
+      spark.sparkContext.addSparkListener(new RunTrace(out = Some(System.err)))
     // Optional JIT warmup against a SMALL corpus before the measured
     // passes: whole-stage codegen sources are cached by plan shape, not
     // data size, so one pass over a 100k-row store compiles the exact same
@@ -196,8 +189,9 @@ object ClusterBench {
     val steady = if (times.size > 1) times.drop(1).min else times.head
     val all = times.map(t => f"$t%.1f").mkString("[", ",", "]")
     val stats = results.map(_._2).mkString("[", ",", "]")
+    val execOpts = spark.conf.getOption("spark.executor.extraJavaOptions").getOrElse("")
     val warm = warmupS.map(w => f""""warmup_s":$w%.1f,""").getOrElse("")
-    println(f"""{"workers":$workers,"n":$n,"profile":"$profile",$warm"cold_s":${times.head}%.1f,"validate_s":$steady%.1f,"passes":$all,"pass_stats":$stats,"clips_per_sec":${n / steady}%.0f,"exec_opts":"${sys.env.getOrElse("SPARK_GRAFT_EXEC_OPTS", "")}"}""")
+    println(f"""{"workers":$workers,"n":$n,"profile":"$profile",$warm"cold_s":${times.head}%.1f,"validate_s":$steady%.1f,"passes":$all,"pass_stats":$stats,"clips_per_sec":${n / steady}%.0f,"exec_opts":"$execOpts"}""")
     spark.stop()
   }
 }

@@ -167,9 +167,9 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
     val stamp = (df: DataFrame) => df
       .withColumn("snapshot_id", lit(snapshotId)).withColumn("run_id", lit(runId))
     // phase tags on the jobs each step submits (visible in the UI/history
-    // and in the JobTimeline — the serial-term attribution)
+    // and in a printing RunTrace — the serial-term attribution)
     val sc = spark.sparkContext
-    val (report, m) = MetricsListener.capture(spark, Some(runId)) {
+    val (report, trace) = RunTrace.capture(spark, Some(runId)) {
       val baselineStats = JobScope(sc, "baseline-stats") {
         baselineStatsFor(spark, effRules.collect { case d: Drift => d }, cfg0)
       }
@@ -182,6 +182,7 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
       rep
     }
     val wallMs = (System.nanoTime() - t0) / 1000000L
+    val m = trace.metrics
 
     val lineage = report.verdicts
       .groupBy(col("partition_values"))

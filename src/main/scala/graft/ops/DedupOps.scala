@@ -15,14 +15,9 @@ import org.apache.spark.sql.functions._
   *    verified with one array_intersect per pair;
   *  - SimHash: 64-bit sign-vector fingerprint, banded by 16-bit chunks,
   *    Hamming-verified with `bit_count(a^b)`;
-  *  - exact n-gram Jaccard: prefix-filtered inverted index (AllPairs/
-  *    PPJoin-style candidate generation — exactness-preserving) + per-pair
-  *    array_intersect verification. The prefix filter orders each
-  *    document's shingles rarest-first (global document frequency) and
-  *    indexes only the first `n - ceil(t*n) + 1`: any pair with Jaccard ≥ t
-  *    provably shares a prefix shingle, while the hot (high-df) shingles —
-  *    the m² blowup of a naive inverted-index self-join — fall outside the
-  *    prefixes and never generate candidates.
+  *  - exact n-gram Jaccard: inverted-index co-occurrence counting — the
+  *    shingle self-join's per-pair count IS the intersection size, so no
+  *    candidate set is verified afterwards.
   */
 object DedupOps {
 
@@ -136,25 +131,30 @@ object DedupOps {
   def tokenSetDupPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     identicalSetPairs(docs, idCol, array_sort(TextOps.distinctTokens(col(textCol))))
 
-  /** Exact n-gram Jaccard pairs ≥ threshold, prefix-filtered:
-    *
-    *   1. global shingle document frequencies (one aggregate);
-    *   2. each doc's shingles ranked rarest-first; only the first
-    *      `n - ceil(t*n) + 1` are indexed (prefix-filter theorem: a pair
-    *      with Jaccard ≥ t must overlap within both prefixes under any
-    *      global shingle order);
-    *   3. candidate pairs from the prefix index self-join, pruned by the
-    *      size filter `min(na, nb) ≥ t · max(na, nb)`;
-    *   4. exact verification per candidate via array_intersect.
-    *
-    * Emits (a, b, inter, uni) with a < b — byte-identical to the naive
-    * inverted-index plan, without its hot-shingle m² candidate blowup.
+  /** Exact n-gram Jaccard pairs ≥ threshold, emitted as (a, b, inter, uni)
+    * with a < b.
     *
     * At `threshold >= 1.0` this delegates to the fingerprint-groupBy path,
     * including its truncation sentinel: a duplicate cluster past the cap
     * emits one `a == b, inter = uni = -clusterSize` marker row (impossible
     * for a real pair, which has a < b and inter > 0) rather than
-    * enumerating O(cluster²) pairs. */
+    * enumerating O(cluster²) pairs.
+    *
+    * Below 1.0 it counts inverted-index co-occurrences: each doc's
+    * distinct shingles (with the set size riding along) self-join on the
+    * shingle, and ONE hash aggregate over the co-occurrence rows computes
+    * the exact intersection size per pair — `inter = count` because
+    * shingles are distinct within a doc. No candidate materialization, no
+    * per-pair set shipping, no array_intersect. The size filter
+    * `min(na,nb) ≥ t·max(na,nb)` prunes inside the join before rows reach
+    * the aggregate.
+    *
+    * Scale note: cost is Σ_s df(s)², the inherent inverted-index bound for
+    * EXACT low-threshold Jaccard (a prefix filter provably cannot prune
+    * hot shingles at low t — they sit inside almost every prefix). A
+    * degenerate hot shingle (df ~ 10^6) makes any exact plan quadratic;
+    * at web scale use MinHash+LSH ([[minHashNearDupPairs]]) for low-t
+    * near-dup, exactly as this library's q17 does. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): DataFrame = {
     if (threshold >= 1.0)
@@ -163,62 +163,6 @@ object DedupOps {
           array_sort(array_distinct(TextOps.shingles(col(textCol), n))))
         .withColumn("uni", col("inter"))
         .select(col("a"), col("b"), col("inter"), col("uni"))
-    // LOW thresholds defeat the prefix filter: the indexed prefix is
-    // `n - ceil(t·n) + 1` ≈ (1-t)·n of each doc, so at t = 0.2 the
-    // "filtered" index still holds ~80% of every shingle and nearly every
-    // co-occurring pair survives as a candidate — measured at the 5k-doc
-    // test corpus: 81% of the index retained, 766k candidates for 256
-    // result pairs, each then paying the verification join (two shingle-
-    // array ships + one array_intersect). In that regime the co-occurrence
-    // COUNT over the full index IS the exact intersection size, at the
-    // same candidate-generation cost and with no verification join at all.
-    // The crossover is heuristic: above t = 0.5 prefixes are short and
-    // candidates few, so candidate+verify wins; below, counting wins.
-    if (threshold < 0.5) return countingJaccardPairs(docs, idCol, textCol, n, threshold)
-    val dt = shingleIndex(docs, idCol, textCol, n)
-    val dfreq = dt.groupBy(col("_s")).agg(count(lit(1)).as("_df"))
-    // prefix selection as ONE hash aggregate: collect each doc's (df,
-    // shingle) pairs, sort the small per-doc array in codegen, slice the
-    // first `n - ceil(t·n) + 1`. Replaces the former row_number window —
-    // a global external sort of every (doc, shingle) row — and folds the
-    // separate per-doc size aggregate + join into the same pass (array
-    // length = set size, since shingles are distinct per doc). Same (df,
-    // shingle) order, so the emitted prefix is byte-identical.
-    val prefix = dt.join(dfreq, "_s")
-      .groupBy(col("_id"))
-      .agg(collect_list(struct(col("_df"), col("_s"))).as("_arr"))
-      .withColumn("_n", size(col("_arr")).cast("long"))
-      .select(col("_id"), col("_n"),
-        explode(slice(sort_array(col("_arr")), lit(1),
-          (col("_n") - ceil(lit(threshold) * col("_n")) + 1).cast("int"))).as("_p"))
-      .select(col("_id"), col("_p._s").as("_s"), col("_n"))
-    val cands = prefix.as("x").join(prefix.as("y"),
-        col("x._s") === col("y._s") && col("x._id") < col("y._id") &&
-          col("x._n").cast("double") >= lit(threshold) * col("y._n") &&
-          col("y._n").cast("double") >= lit(threshold) * col("x._n"))
-      .select(col("x._id").as("a"), col("y._id").as("b"))
-      .distinct()
-    verifyJaccard(cands, shingleSets(docs, idCol, textCol, n), threshold)
-      .select(col("a"), col("b"), col("inter"), col("uni"))
-  }
-
-  /** Exact Jaccard pairs via inverted-index co-occurrence COUNTING — the
-    * low-threshold plan: each doc's distinct shingles (with the set size
-    * riding along) self-join on the shingle, and ONE hash aggregate over
-    * the co-occurrence rows computes the exact intersection size per pair
-    * — `inter = count` because shingles are distinct within a doc. No
-    * candidate materialization, no per-pair set shipping, no
-    * array_intersect. The size filter `min(na,nb) ≥ t·max(na,nb)` prunes
-    * inside the join before rows reach the aggregate.
-    *
-    * Scale note: cost is Σ_s df(s)², the inherent inverted-index bound for
-    * EXACT low-threshold Jaccard (the prefix filter provably cannot prune
-    * hot shingles at low t — they sit inside almost every prefix). A
-    * degenerate hot shingle (df ~ 10^6) makes any exact plan quadratic;
-    * at web scale use MinHash+LSH ([[minHashNearDupPairs]]) for low-t
-    * near-dup, exactly as this library's q17 does. */
-  private def countingJaccardPairs(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double): DataFrame = {
     val sets = shingleSets(docs, idCol, textCol, n)
     // Two deliberate choices versus the straightforward string-shingle
     // explode + self-join, both aimed at the exchanges this plan lives in:

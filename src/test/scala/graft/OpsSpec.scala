@@ -33,22 +33,25 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("low-threshold jaccardPairs (counting plan) matches driver-side brute force") {
-    // t < 0.5 dispatches to the co-occurrence-counting plan; every (a, b,
-    // inter, uni) tuple must equal the brute-force all-pairs answer
+    // every t < 1 runs the co-occurrence-counting plan; every (a, b,
+    // inter, uni) tuple must equal the brute-force all-pairs answer, at the
+    // queries' low threshold and at one above one half
     val rows = docs.select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1))
     def shingleSet(t: String): Set[String] =
       t.split(" ", -1).toSeq.sliding(3).filter(_.size == 3).map(_.mkString(" ")).toSet
     val sets = rows.map { case (id, t) => id -> shingleSet(t) }.filter(_._2.nonEmpty)
-    val expected = (for {
-      (a, sa) <- sets; (b, sb) <- sets if a < b
-      inter = (sa & sb).size; uni = (sa | sb).size
-      if uni > 0 && inter.toDouble / uni >= 0.2
-    } yield (a, b, inter.toLong, uni.toLong)).toSet
-    val got = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got === expected)
-    assert(got.nonEmpty)
+    for (t <- Seq(0.2, 0.6)) {
+      val expected = (for {
+        (a, sa) <- sets; (b, sb) <- sets if a < b
+        inter = (sa & sb).size; uni = (sa | sb).size
+        if uni > 0 && inter.toDouble / uni >= t
+      } yield (a, b, inter.toLong, uni.toLong)).toSet
+      val got = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(got === expected, s"t=$t")
+      assert(got.nonEmpty, s"t=$t")
+    }
   }
 
   test("LSH ANN achieves high recall vs brute-force top-k") {

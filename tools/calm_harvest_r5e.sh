@@ -40,11 +40,12 @@ cell() { # $1 = workers, $2 = out.jsonl; returns ClusterBench's exit code
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 SPARK_LOCAL_DIRS=/dev/shm/spark-local \
   SPARK_GRAFT_WARMUP_DIR="$WARMUP" SPARK_GRAFT_STAGEDUMP=1 \
   SPARK_GRAFT_ABORT_STEAL_J=${ABORT_J:-400} \
-  SPARK_GRAFT_PASSES=1 SPARK_GRAFT_PARTS=32 SPARK_GRAFT_EXEC_CORES=$CORES \
+  SPARK_GRAFT_PASSES=1 SPARK_GRAFT_EXEC_CORES=$CORES \
   SPARK_GRAFT_SETTLE_S=${SETTLE:-15} \
-  SPARK_GRAFT_EXEC_OPTS="-XX:ActiveProcessorCount=$CORES -Xms${MEM}m -XX:+AlwaysPreTouch -XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=256m" \
   java $AO -Xmx8g -XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m \
-    -Dspark.ui.enabled=false -cp "$JAR:/opt/spark/jars/*" \
+    -Dspark.ui.enabled=false -Dspark.sql.shuffle.partitions=32 \
+    "-Dspark.executor.extraJavaOptions=-XX:ActiveProcessorCount=$CORES -Xms${MEM}m -XX:+AlwaysPreTouch -XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=256m" \
+    -cp "$JAR:/opt/spark/jars/*" \
     graft.ClusterBench "$1" "$N" "$WORK" full "$MEM" 2>>"$2.err" \
     | grep -oE '\{"workers".*\}' | sed "s/^{/{\"cores\":$CORES,/" >> "$2"
   local rc=${PIPESTATUS[0]}

@@ -12,8 +12,8 @@
 #    repeated in-app re-validations of the same corpus degrade monotonically
 #    (accumulating executor/driver JVM state — a harness regime production
 #    never sits in: one submission = one validation run);
-#  - executor JVMs run -XX:ActiveProcessorCount=1 (override via
-#    SPARK_GRAFT_EXEC_OPTS_OVERRIDE): each 1-core executor otherwise sizes
+#  - executor JVMs run -XX:ActiveProcessorCount=1 (override via EXEC_OPTS,
+#    passed as -Dspark.executor.extraJavaOptions): each 1-core executor otherwise sizes
 #    GC/JIT pools for all 32 host cores — 8 such JVMs degraded the steady
 #    pass ~8x (174.5s vs 21.8s at n=100k, measured r3). This is the
 #    faithful analog of container-core-capped executors in production;
@@ -38,16 +38,16 @@ PROFILES=${PROFILES:-full}
 OUT=${CLUSTER_OUT:-/tmp/cluster_cells.jsonl}
 JAR=target/scala-2.13/sourcesystemdatacheckerspark_2.13-0.1.0.jar
 CP="$JAR:/opt/spark/jars/*"
-EXEC_OPTS=${SPARK_GRAFT_EXEC_OPTS_OVERRIDE:-"-XX:ActiveProcessorCount=1 -XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=256m"}
+EXEC_OPTS=${EXEC_OPTS:-"-XX:ActiveProcessorCount=1 -XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=256m"}
 
 ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 
 run() { # run <workers|prep> <profile>
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \
   SPARK_LOCAL_DIRS=/dev/shm/spark-local SPARK_GRAFT_PASSES=${SPARK_GRAFT_PASSES:-2} \
-  SPARK_GRAFT_EXEC_OPTS="$EXEC_OPTS" \
   java $ADD_OPENS -Xmx8g -XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+    -Dspark.sql.shuffle.partitions=32 "-Dspark.executor.extraJavaOptions=$EXEC_OPTS" \
     -cp "$CP" graft.ClusterBench "$1" "$N" "$WORK" "$2" 3072 2>/dev/null \
     | grep -oE '\{"(workers|prep)".*\}' | tail -1
 }
