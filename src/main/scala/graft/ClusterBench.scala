@@ -76,20 +76,17 @@ object ClusterBench {
     if (mode == "prep") {
       val spark = SparkProfile.session("graft-cluster-prep")
       spark.sparkContext.setLogLevel("ERROR")
-      // SPARK_GRAFT_BUCKETS > 0 (default 64): write the corpus hash-
-      // clustered by clip_id — the Iceberg bucket(clip_id, N) layout the
-      // production design assumes, which lets every validation run's diff
-      // join go exchange-free. 0 = legacy unclustered layout.
-      val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "64").toInt
+      // write the corpus hash-clustered by clip_id as graft.Main does — the
+      // Iceberg bucket(clip_id, N) layout the production design assumes,
+      // which lets every validation run's diff join go exchange-free
       if (!store.exists("clips")) {
         def put(table: String, df: org.apache.spark.sql.DataFrame): Unit =
-          if (buckets > 0) store.appendClustered(table, df, "clip_id", buckets)
-          else store.append(table, df)
+          store.appendClustered(table, df, "clip_id", Main.Buckets)
         put("baseline_clips", graft.synth.ClipSynth.baseline(spark, n).toDF())
         put("transcripts", graft.synth.ClipSynth.transcripts(spark, n).toDF())
         put("clips", graft.synth.ClipSynth.clips(spark, n).toDF())
       }
-      println(s"""{"prep":"ok","n":$n,"buckets":$buckets}""")
+      println(s"""{"prep":"ok","n":$n,"buckets":${Main.Buckets}}""")
       spark.stop()
       return
     }

@@ -13,6 +13,9 @@ import graft.synth.ClipSynth
   * Usage: graft.Main [workDir] [nRows] [--fresh]
   */
 object Main {
+  /** Hash buckets the synthesized corpus is clustered into by clip_id. */
+  val Buckets = 64
+
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-demo")
     val n = args.drop(1).headOption.map(_.toLong).getOrElse(100000L)
@@ -28,16 +31,13 @@ object Main {
     val store = new SnapshotStore(s"$workDir/state")
     val outStore = new SnapshotStore(s"$workDir/out")
 
-    // snapshot 0 = baseline-ish tables; clips appended as snapshot-pinned input
-    // SPARK_GRAFT_BUCKETS > 0 (default 64): hash-cluster the corpus by
-    // clip_id (Iceberg bucket-partition emulation) so the payload diff join
-    // runs exchange-free; 0 = legacy unclustered layout.
-    val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "64").toInt
+    // snapshot 0 = baseline-ish tables; clips appended as snapshot-pinned input,
+    // hash-clustered by clip_id into Buckets buckets (Iceberg bucket-partition
+    // emulation) so the payload diff join runs exchange-free
     if (!store.exists("clips")) {
-      println(s"[main] synthesizing corpus n=$n under $workDir (buckets=$buckets) ...")
+      println(s"[main] synthesizing corpus n=$n under $workDir (buckets=$Buckets) ...")
       def put(t: String, df: org.apache.spark.sql.DataFrame): Unit =
-        if (buckets > 0) store.appendClustered(t, df, "clip_id", buckets)
-        else store.append(t, df)
+        store.appendClustered(t, df, "clip_id", Buckets)
       put("baseline_clips", ClipSynth.baseline(spark, n).toDF())
       put("transcripts", ClipSynth.transcripts(spark, n).toDF())
       put("clips", ClipSynth.clips(spark, n).toDF())

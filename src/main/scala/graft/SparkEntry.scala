@@ -88,12 +88,11 @@ object SparkEntry {
       s"$c/cands_annlsh" -> ((s: SparkSession) => {
         implicit val sp: SparkSession = s
         val emb = t(dir, "embeddings")
-        AnnOps.lshTopKCandidates(emb.filter(col("vec_id") < 20), emb,
-          dim = 64, p = 4, probeRadius = 2)
+        AnnOps.lshTopKCandidates(emb.filter(col("vec_id") < 20), emb, p = 4, probeRadius = 2)
       }),
       s"$c/cands_embneardup" -> ((s: SparkSession) => {
         implicit val sp: SparkSession = s
-        AnnOps.embeddingNearDupCandidates(t(dir, "embeddings"), dim = 64)
+        AnnOps.embeddingNearDupCandidates(t(dir, "embeddings"))
       }),
       s"$c/sigs_simhash128" -> ((s: SparkSession) => {
         implicit val sp: SparkSession = s
@@ -123,8 +122,9 @@ object SparkEntry {
   /** Fails the query on a dedup cap marker: an overflowing duplicate cluster
     * or band bucket surfaces as ONE `a == b` row (`DedupOps`), impossible for
     * a real pair (a < b). The DuckDB oracles model real pairs only, so a
-    * marker reaching q15/q17/q21 must FAIL LOUDLY (raise_error) instead of
-    * passing as a self-pair at similarity 1.0. On the contract corpora no
+    * marker reaching q15/q17/q18/q21/q35 must FAIL LOUDLY (raise_error)
+    * instead of passing as a self-pair (at similarity 1.0, or at a negative
+    * Hamming distance from the SimHash pairings). On the contract corpora no
     * cluster approaches the cap, so the guard never fires and the result is
     * unchanged. */
   private[graft] def failOnCapMarker(pairs: DataFrame, query: String): DataFrame =
@@ -335,7 +335,8 @@ object SparkEntry {
     // hole at d<=3 (the sketch itself stays ScalaTest-verified)
     "q18_simhash" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      DedupOps.simHash64PairsFromSigs(readExport(s, dir, "sigs_simhash64"), maxHamming = 3)
+      failOnCapMarker(DedupOps.simHash64PairsFromSigs(
+          readExport(s, dir, "sigs_simhash64"), maxHamming = 3), "q18")
         .orderBy("a", "b")
     }),
 
@@ -534,7 +535,8 @@ object SparkEntry {
     // pairs from the same signatures — any pigeonhole recall hole would show
     "q35_simhash128" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      DedupOps.simHash128PairsFromSigs(readExport(s, dir, "sigs_simhash128"), maxHamming = 6)
+      failOnCapMarker(DedupOps.simHash128PairsFromSigs(
+          readExport(s, dir, "sigs_simhash128"), maxHamming = 6), "q35")
         .orderBy("a", "b")
     }),
 

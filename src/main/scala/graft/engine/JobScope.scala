@@ -3,9 +3,9 @@ package graft.engine
 import org.apache.spark.SparkContext
 
 /** The one owner of the labels a Spark job carries: its `graft:<phase>`
-  * description (the key the UI, `graft.JobTimeline` and trace readers
-  * attribute jobs by) and the run's job group (the key
-  * [[MetricsListener]] scopes a run's task metrics by). A scope sets them
+  * description (the key the UI, [[RunTrace]]'s printed timeline and trace
+  * readers attribute jobs by) and the run's job group (the key
+  * [[RunTrace]] scopes a run's task metrics by). A scope sets them
   * on the calling thread for the duration of `body` and puts the thread's
   * previous values back on exit, so nested scopes, callers carrying
   * labels of their own, and reused pool threads all get their labels back.

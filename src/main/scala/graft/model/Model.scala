@@ -5,13 +5,11 @@ package graft.model
   * Mirrors (behaviorally, not structurally) the reference's domain types:
   *   - `ClipRecord` ↔ the incoming event payload
   *     (reference: domain/specimen/DigitalSpecimenEvent.java:9-15)
-  *   - `Violation`  ↔ the routed "new/changed" outputs
-  *     (reference: domain/specimen/FilteredDigitalSpecimens.java:6-9)
-  *   - `Verdict`    ↔ per-partition pass/fail (reference routes per batch;
-  *     we route per table partition)
-  *   - `LineageRow` ↔ the `last_checked` bookkeeping + MAS job side-channel
-  *     (reference: repository/SpecimenRepository.java:35-40,
-  *      domain/mas/MasJobRequest.java:3-9)
+  *   - `Outcome`    ↔ the new/changed/unchanged routing
+  *
+  * The output tables (violations, verdicts, lineage) have no case class:
+  * `ValidationEngine` declares the violation and verdict schemas as DDL,
+  * and `CheckpointedRunner` projects the lineage rows from the verdicts.
   *
   * Schema of `ClipRecord` is authoritative from BASELINE.json `input_hint`:
   * (clip_id:string, bytes:binary, sr_hz:int32, dur_ms:int32, codec:string,
@@ -27,35 +25,6 @@ final case class ClipRecord(
 )
 
 final case class TranscriptRow(clip_id: String, transcript: String)
-
-/** One rule violation. Column names are part of the public contract. */
-final case class Violation(
-    clip_id: String,
-    rule_id: String,
-    observed: String,
-    expected: String
-)
-
-/** Per-(partition, rule) pass/fail verdict. `partition_values` is the
-  * rendered partition tuple, e.g. "codec=ulaw". */
-final case class Verdict(
-    partition_values: String,
-    rule_id: String,
-    pass: Boolean,
-    violation_count: Long
-)
-
-/** Per-partition lineage row — the resumability checkpoint unit.
-  * A partition whose (snapshot_id, partition_values) lineage row exists is
-  * skipped on re-run (reference analog: `last_checked` update gating,
-  * service/SourceSystemDataCheckerService.java:62-66). */
-final case class LineageRow(
-    snapshot_id: Long,
-    partition_values: String,
-    rules_evaluated: Seq[String],
-    violation_count: Long,
-    wall_ms: Long
-)
 
 /** Outcome of the 3-way diff classification — the reference's core routing
   * (service/SourceSystemDataCheckerService.java:122-139). */

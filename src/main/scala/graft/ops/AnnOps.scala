@@ -74,10 +74,9 @@ object AnnOps {
   private def planeWeight(seed: Long, plane: Int, idx: Column): Column =
     pmod(xxhash64(lit(seed), lit(plane), idx), lit(1000001L)).cast("double") / 500000.0 - 1.0
 
-  /** Sign-bucket id for each vector: bit i = sign(v · plane_i). `dim` is
-    * not needed (the projection folds over the array itself); kept for API
-    * compatibility with callers that size probe tables from it. */
-  def lshBucket(vec: Column, dim: Int, p: Int = 12, seed: Long = 42L): Column = {
+  /** Sign-bucket id for each vector: bit i = sign(v · plane_i), the
+    * projection folding over the array itself, whatever its length. */
+  def lshBucket(vec: Column, p: Int = 12, seed: Long = 42L): Column = {
     val bits = (0 until p).map { i =>
       val proj = aggregate(
         transform(vec, (x, d) => x.cast("double") * planeWeight(seed, i, d)),
@@ -102,11 +101,11 @@ object AnnOps {
     * exact cosine re-rank within candidates. Recall/cost dial: higher `p`
     * = smaller buckets (cheaper, lower recall), higher `probeRadius` =
     * more buckets searched (higher recall). */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
+  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       p: Int = 8, probeRadius: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     topKFromCandidates(
-      lshTopKCandidates(queries, corpus, dim, p, probeRadius, idCol, vecCol),
+      lshTopKCandidates(queries, corpus, p, probeRadius, idCol, vecCol),
       queries, corpus, k, idCol, vecCol)
 
   /** Candidate (query_id, neighbor_id) pairs of [[lshTopK]]: same bucket or
@@ -114,10 +113,10 @@ object AnnOps {
     * candidate set can be exported and the re-rank stage independently
     * re-checked (e.g. a SQL oracle recomputing exact cosine + rank over the
     * same materialized pairs). */
-  def lshTopKCandidates(queries: DataFrame, corpus: DataFrame, dim: Int,
+  def lshTopKCandidates(queries: DataFrame, corpus: DataFrame,
       p: Int = 8, probeRadius: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val bucket = lshBucket(col(vecCol), dim, p)
+    val bucket = lshBucket(col(vecCol), p)
     val c = corpus.select(col(idCol).as("neighbor_id"), bucket.as("_bkt"))
     val qBase = queries.select(col(idCol).as("query_id"), bucket.as("_qb"))
     val masks = probeMasks(p, probeRadius)
@@ -152,11 +151,11 @@ object AnnOps {
     * candidate verifies, so there are no false positives and recall is
     * 1-(1-(1-θ/π)^p)^bands per pair. The bucket join ships only
     * (id, band, bucket) — vectors rejoin for verification by id. */
-  def embeddingNearDupPairs(vectors: DataFrame, threshold: Double, dim: Int,
+  def embeddingNearDupPairs(vectors: DataFrame, threshold: Double,
       p: Int = 4, bands: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     verifiedCosinePairs(
-      embeddingNearDupCandidates(vectors, dim, p, bands, idCol, vecCol),
+      embeddingNearDupCandidates(vectors, p, bands, idCol, vecCol),
       vectors, threshold, idCol, vecCol)
 
   /** Candidate-pair generation stage of [[embeddingNearDupPairs]] (banded
@@ -164,21 +163,21 @@ object AnnOps {
     * candidate set can be exported and the verification stage re-checked
     * independently (e.g. by a SQL oracle over the same materialized set).
     *
-    * Hot-bucket bound (100 TB guard, the simHash128 pattern): a sign bucket
-    * holding more than `maxBucketSize` vectors — a degenerate corpus of
+    * Hot-bucket bound (100 TB guard, [[DedupOps.cappedBandPairs]]): a sign
+    * bucket holding more than `maxBucketSize` vectors — a degenerate corpus of
     * ~identical embeddings would drive one bucket to O(bucket²) pairs — is
     * EXCLUDED from the pair join and surfaced as ONE deterministic
     * `a == b == min(member id)` marker row, impossible for a real candidate
     * (a < b). The marker stays visible through exact verification (a
     * self-pair verifies at cosine 1.0); pairs the oversized bucket would
     * have found usually survive via their other bands. */
-  def embeddingNearDupCandidates(vectors: DataFrame, dim: Int,
+  def embeddingNearDupCandidates(vectors: DataFrame,
       p: Int = 4, bands: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucketSize: Int = 10000): DataFrame = {
-    val bandCols = (0 until bands).map(b =>
-      struct(lit(b).as("band"), lshBucket(col(vecCol), dim, p, seed = 42L + b).as("h")))
-    DedupOps.cappedBandPairs(vectors, col(idCol), bandCols, maxBucketSize)
+    val bandKeys = (0 until bands).map(b => Seq(lit(b), lshBucket(col(vecCol), p, seed = 42L + b)))
+    DedupOps.cappedBandPairs(vectors, col(idCol), bandKeys, maxBucketSize)
+      .select(col("a"), col("b"))
   }
 
   /** Exact-cosine verification of a candidate-pair set (a, b): vectors

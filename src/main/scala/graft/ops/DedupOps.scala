@@ -9,15 +9,21 @@ import org.apache.spark.sql.functions._
   * around one shuffle-bounded plan:
   *
   *  - exact: hash-groupBy on content (or any column set);
-  *  - identical token sets (Jaccard = 1.0): fingerprint groupBy — NO join;
+  *  - identical token sets (Jaccard = 1.0): one bucket per set
+  *    fingerprint, pairs enumerated inside it;
   *  - MinHash + LSH: shingle → k-lane minhash → banded bucket join —
   *    candidate generation never compares all pairs; candidates are
   *    verified with one array_intersect per pair;
-  *  - SimHash: 64-bit sign-vector fingerprint, banded by 16-bit chunks,
-  *    Hamming-verified with `bit_count(a^b)`;
+  *  - SimHash: 64- or 128-bit sign-vector fingerprint, pigeonhole-banded
+  *    into `maxHamming + 1` bit slices, Hamming-verified with
+  *    `bit_count(a^b)`;
   *  - exact n-gram Jaccard: inverted-index co-occurrence counting — the
   *    shingle self-join's per-pair count IS the intersection size, so no
   *    candidate set is verified afterwards.
+  *
+  * Every pair-finding operator (identical sets, MinHash LSH, both SimHash
+  * widths, and AnnOps' embedding near-dups) goes through ONE capped band
+  * self-join, [[cappedBandPairs]], which also owns the hot-bucket cap.
   */
 object DedupOps {
 
@@ -28,23 +34,17 @@ object DedupOps {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n"))
       .filter(col("n") > 1)
 
-  /** Exact dedup keeping the smallest id per content group (deterministic,
-    * unlike dropDuplicates' arbitrary pick). */
-  def dedupKeepMinId(df: DataFrame, idCol: String, cols: Seq[String]): DataFrame = {
-    val keep = df.groupBy(cols.map(col): _*).agg(min(col(idCol)).as(idCol))
-    df.join(keep, cols :+ idCol, "left_semi")
-  }
-
   /** Spread `df` over the session's configured shuffle parallelism before
     * a row-amplifying or CPU-heavy projection. Scan parallelism follows
     * file splits (`maxPartitionBytes`), which is the WRONG unit for an
     * explode that amplifies rows ~100×, a per-row tokenize/sort or a
-    * per-row vector fold (AnnOps): a 100 MB parquet split exploding to
-    * 10 GB of shingles runs on one core. The explicit partition count keeps
-    * AQE from re-coalescing the (small pre-explode) exchange back down. */
-  private[ops] def spread(df: DataFrame, key: String): DataFrame = {
+    * per-row vector fold (AnnOps), or a bucket self-join that emits
+    * O(bucket²) pairs: a 100 MB parquet split exploding to 10 GB of
+    * shingles runs on one core. The explicit partition count keeps AQE from
+    * re-coalescing the (small pre-explode) exchange back down. */
+  private[ops] def spread(df: DataFrame, keys: String*): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(parts, col(key))
+    df.repartition(parts, keys.map(col): _*)
   }
 
   /** (id, shingle) inverted index over distinct word n-gram shingles. */
@@ -80,47 +80,31 @@ object DedupOps {
       .withColumn("uni", (col("na") + col("nb")).cast("long") - col("inter"))
       .filter(col("inter").cast("double") / col("uni") >= threshold)
 
-  /** Identical-set duplicate pairs (the Jaccard = 1.0 special case) WITHOUT
-    * any join: identical sets have identical fingerprints, so one groupBy
-    * on a 128-bit fingerprint of the sorted distinct-element array finds
-    * every duplicate cluster; pairs are enumerated inside each (tiny)
-    * cluster. Output (a, b, inter) with a < b, inter = set size.
+  /** Identical-set duplicate pairs (the Jaccard = 1.0 special case):
+    * identical sets have identical fingerprints, so ONE band keyed on a
+    * 128-bit fingerprint of the sorted distinct-element array plus the set
+    * size puts every duplicate cluster in one bucket of
+    * [[cappedBandPairs]], which enumerates its pairs. Output (a, b, inter)
+    * with a < b, inter = set size.
     *
-    * Cluster-size bound (100 TB guard): the aggregation buffer retains at
-    * most `maxClusterSize` member ids (exact count still tracked), so one
-    * pathological billion-copy duplicate cluster can neither materialize an
-    * O(cluster) array in a single aggregation row nor emit O(cluster²)
-    * pairs. A truncated cluster emits ONE deterministic marker row instead:
+    * Cluster-size bound (100 TB guard): a cluster of more than
+    * `maxClusterSize` members is left out of the pair join, so one
+    * pathological billion-copy duplicate cluster cannot emit O(cluster²)
+    * pairs. It emits ONE deterministic marker row instead:
     * `a == b == min(id)` with `inter = -clusterSize` — impossible for a
     * real pair (which always has a < b and inter > 0). */
   def identicalSetPairs(docs: DataFrame, idCol: String, sortedSet: Column,
       maxClusterSize: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.graft.CollectCappedAgg.collect_capped
-    val toks = sortedSet
-    val groups = spread(docs, idCol)
-      .select(col(idCol).as("_id"),
-        xxhash64(lit(1), toks).as("_fp1"), xxhash64(lit(2), toks).as("_fp2"),
-        size(toks).as("_n"))
-      .groupBy(col("_fp1"), col("_fp2"), col("_n"))
-      .agg(collect_capped(col("_id"), maxClusterSize).as("_g"),
-        min(col("_id")).as("_min"))
-      .select(col("_n"), sort_array(col("_g.ids")).as("_ids"),
-        col("_g.n").as("_cn"), col("_min"))
-      .filter(col("_cn") > 1)
-    // ONE subtree for both outcomes: a normal cluster enumerates its pairs,
-    // an oversized one collapses to the single (min, min, -size) marker via
-    // the same two generates. The former pairs/tooLarge UNION referenced
-    // `groups` twice, and (the filters differing) nothing was reusable — the
-    // whole scan + fingerprint + capped-collect aggregation ran TWICE per
-    // query (measured in the q15 plan: two full ObjectHashAggregate chains).
-    val ok = col("_cn") <= maxClusterSize
-    groups
-      .select(col("_n"), col("_ids"), col("_cn"), col("_min"),
-        posexplode(when(ok, col("_ids")).otherwise(array(col("_min")))).as(Seq("_i", "a")))
-      .select(col("a"),
-        explode(when(ok, slice(col("_ids"), col("_i") + lit(2), size(col("_ids"))))
-          .otherwise(array(col("_min")))).as("b"),
-        when(ok, col("_n").cast("long")).otherwise(-col("_cn")).as("inter"))
+    // the set is its own projection, so its expression is planned once
+    val sets = spread(docs, idCol).select(col(idCol).as("_id"), sortedSet.as("_set"))
+      .select(col("_id"), xxhash64(lit(1), col("_set")).as("_fp1"),
+        xxhash64(lit(2), col("_set")).as("_fp2"), size(col("_set")).as("_n"))
+    // both sides hold the set size; reading both keeps the join's two sides
+    // one plan, so the fingerprints are computed once
+    cappedBandPairs(sets, col("_id"), Seq(Seq(col("_fp1"), col("_fp2"), col("_n"))),
+        maxClusterSize, carry = Seq("_n"))
+      .select(col("a"), col("b"),
+        coalesce(-col("bucket"), least(col("x__n"), col("y__n")).cast("long")).as("inter"))
   }
 
   /** Identical-token-set duplicate pairs (whitespace tokens, n = 1).
@@ -134,7 +118,7 @@ object DedupOps {
   /** Exact n-gram Jaccard pairs ≥ threshold, emitted as (a, b, inter, uni)
     * with a < b.
     *
-    * At `threshold >= 1.0` this delegates to the fingerprint-groupBy path,
+    * At `threshold >= 1.0` this delegates to [[identicalSetPairs]],
     * including its truncation sentinel: a duplicate cluster past the cap
     * emits one `a == b, inter = uni = -clusterSize` marker row (impossible
     * for a real pair, which has a < b and inter > 0) rather than
@@ -158,7 +142,7 @@ object DedupOps {
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): DataFrame = {
     if (threshold >= 1.0)
-      // Jaccard = 1 ⇔ identical shingle sets: fingerprint groupBy, no join
+      // Jaccard = 1 ⇔ identical shingle sets: one fingerprint bucket per set
       return identicalSetPairs(docs, idCol,
           array_sort(array_distinct(TextOps.shingles(col(textCol), n))))
         .withColumn("uni", col("inter"))
@@ -213,8 +197,7 @@ object DedupOps {
     * k/bands rows, bucket-join on (band index, band hash). Identical-band
     * docs collide; distinct pairs only (a < b).
     *
-    * Hot-bucket bound (100 TB guard, same pattern as
-    * [[simHash128PairsFromSigs]]): a bucket holding more than
+    * Hot-bucket bound (100 TB guard, [[cappedBandPairs]]): a bucket holding more than
     * `maxBucketSize` members — a degenerate corpus where ~every doc shares
     * one band hash would otherwise drive the self-join to O(bucket²) pairs —
     * is EXCLUDED from the pair join and surfaced as ONE deterministic marker
@@ -227,37 +210,67 @@ object DedupOps {
   def lshCandidatePairs(signatures: DataFrame, k: Int = 32, bands: Int = 8,
       maxBucketSize: Int = 10000): DataFrame = {
     val rows = k / bands
-    val bandCols = (0 until bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        xxhash64((bnd * rows until (bnd + 1) * rows).map(i => col(s"_mh$i")): _*).as("h"))
-    }
-    cappedBandPairs(signatures, col("_id"), bandCols, maxBucketSize)
+    val bandKeys = (0 until bands).map(bnd =>
+      Seq(lit(bnd), xxhash64((bnd * rows until (bnd + 1) * rows).map(i => col(s"_mh$i")): _*)))
+    cappedBandPairs(signatures, col("_id"), bandKeys, maxBucketSize).select(col("a"), col("b"))
   }
 
-  /** Distinct candidate pairs (a, b), a < b, of the rows of `df` that share
-    * a band bucket: `bandCols` are `struct(band, h)` bucket keys, one per
-    * band, and `id` is the row id. A bucket of more than `maxBucketSize`
-    * rows is left out of the self-join and emits ONE `a == b == min(id)`
-    * marker row instead (see [[lshCandidatePairs]]). */
-  private[ops] def cappedBandPairs(df: DataFrame, id: Column, bandCols: Seq[Column],
-      maxBucketSize: Int): DataFrame = {
-    // bucket membership count via ONE window pass over the (band, hash)
-    // shuffle both join branches need anyway; identical in both branches,
-    // so ReuseExchange evaluates it once
-    val bucketKey = Seq(col("_band"), col("_h"))
-    val buckets = df
-      .select(id.as("_id"), explode(array(bandCols: _*)).as("_b"))
-      .select(col("_id"), col("_b.band").as("_band"), col("_b.h").as("_h"))
-      .withColumn("_bn", count(lit(1)).over(Window.partitionBy(bucketKey: _*)))
-      .withColumn("_bmin", min(col("_id")).over(Window.partitionBy(bucketKey: _*)))
-    val ok = buckets.filter(col("_bn") <= maxBucketSize)
-    val pairs = ok.as("x").join(ok.as("y"),
-        col("x._band") === col("y._band") && col("x._h") === col("y._h") &&
-          col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"))
-    val markers = buckets.filter(col("_bn") > maxBucketSize)
-      .select(col("_bmin").as("a"), col("_bmin").as("b"))
-    pairs.unionByName(markers).distinct()
+  /** Distinct pairs (a, b), a < b, of the rows of `df` that share a band
+    * bucket — the one bucket self-join of every pair-finding operator.
+    * `bands` holds each band's bucket key, a list of columns of the same
+    * types in every band: a bucket is one value of the whole key (so a band
+    * index in it keeps the bands apart). `id` is the row id; a null id is
+    * in no bucket, nor is a row whose bucket key has a null.
+    *
+    * Each column named in `carry` rides along on both sides of a pair, as
+    * `x_<c>` (a's value) and `y_<c>` (b's value), so the caller can verify
+    * or measure the pair without rejoining by id.
+    *
+    * Hot-bucket bound (100 TB guard): a bucket of more than `maxBucketSize`
+    * members — a degenerate corpus where ~every row shares one key would
+    * drive the self-join to O(bucket²) pairs — is left out of the join and
+    * surfaces as ONE marker row per min member id, `a == b == min(id)`,
+    * impossible for a real pair (a < b). Its `bucket` column holds the size
+    * of the largest oversized bucket that id heads, and both sides carry
+    * that id's values; `bucket` is null on a real pair. */
+  private[ops] def cappedBandPairs(df: DataFrame, id: Column, bands: Seq[Seq[Column]],
+      maxBucketSize: Int, carry: Seq[String] = Nil): DataFrame = {
+    val key = bands.head.indices.map(i => s"_k$i")
+    val keyed = bands.map(cols => struct(cols.zip(key).map { case (c, k) => c.as(k) }: _*))
+    // member count and min id via ONE window pass over the bucket shuffle
+    // the join needs anyway, spread over every shuffle partition since the
+    // join multiplies rows. A key with a null never equi-joins, so such a
+    // row is dropped before it is counted; dropping it here rather than by
+    // the join's inferred filter (pushed below the window on one side only)
+    // keeps the two join sides one plan, so ReuseExchange runs the shuffle,
+    // and whatever computes `df`, once
+    val bucket = Window.partitionBy(key.map(col): _*)
+    val banded = df.select((id.as("_id") +: carry.map(col)) :+ inline(array(keyed: _*)): _*)
+    val buckets = spread(banded.filter(key.map(col(_).isNotNull).reduce(_ && _)), key: _*)
+      .select(col("*"), count(col("_id")).over(bucket).as("_bn"),
+        min(col("_id")).over(bucket).as("_bmin"))
+    // the join's left side: every member of a bucket small enough to pair,
+    // plus the min member of each oversized bucket, which finds no partner
+    // (its bucket is not on the right) and so comes out as its marker row
+    val ok = col("_bn") > 1 && col("_bn") <= maxBucketSize
+    val marker = col("x._bn") > maxBucketSize
+    // a sort-merge join: the window leaves both sides partitioned and sorted
+    // on the key already, where a broadcast would add a stage
+    val rows = buckets.filter(ok || col("_bn") > maxBucketSize && col("_id") === col("_bmin"))
+      .as("x").hint("merge").join(buckets.filter(ok).as("y"),
+        key.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) && col("x._id") < col("y._id"),
+        "left_outer")
+      .filter(col("y._id").isNotNull || marker)
+      .select((col("x._id").as("a") +: coalesce(col("y._id"), col("x._id")).as("b") +:
+          carry.map(c => col(s"x.$c").as(s"x_$c"))) ++
+        carry.map(c => when(marker, col(s"x.$c")).otherwise(col(s"y.$c")).as(s"y_$c")) :+
+        when(marker, col("x._bn")).as("bucket"): _*)
+    // with one band a pair meets in one bucket and an id heads one bucket;
+    // with several, ONE aggregate merges a pair met in several and an id
+    // heading several oversized buckets (a caller's filter on the pair
+    // columns is pushed below its shuffle)
+    if (bands.size == 1) rows
+    else rows.groupBy(rows.columns.init.map(col): _*).agg(max(col("bucket")).as("bucket"))
   }
 
   /** Exact Jaccard verification of an externally-supplied candidate-pair
@@ -312,69 +325,58 @@ object DedupOps {
   }
 
   /** Near-dup pairs from 128-bit signatures (columns _id, _s1, _s2), with a
-    * GUARANTEED-recall banding: the 128 bits are sliced into `maxHamming+1`
-    * contiguous chunks, so any pair within the distance bound has at least
-    * one chunk with zero differing bits (pigeonhole) and always becomes a
-    * candidate — the `bit_count` filter then makes the output exact.
+    * GUARANTEED-recall banding: see [[simHashPairs]].
     *
     * Scale dial: per-band bucket space is 2^(128/(maxHamming+1)) — 2^32 at
     * d≤3, 2^18 at d≤6. At 10^10 docs the d≤6 banding holds ~38k docs per
     * bucket, so extreme-scale callers should keep the bound tight (the
     * guarantee-vs-bucket-size tradeoff is structural to LSH banding, not
-    * an implementation artifact).
+    * an implementation artifact). */
+  def simHash128PairsFromSigs(sigs: DataFrame, maxHamming: Int,
+      maxBucketSize: Int = 10000): DataFrame =
+    simHashPairs(sigs, Seq("_s1", "_s2"), maxHamming, maxBucketSize)
+
+  /** Near-dup pairs (a, b, hamming), a < b, hamming ≤ `maxHamming`, from a
+    * signature of 64-bit `lanes` (low bits first). The signature's bits are
+    * cut into `maxHamming + 1` contiguous slices, one band each, so any
+    * pair within the distance bound has at least one slice with zero
+    * differing bits (pigeonhole) and always becomes a candidate; the
+    * Hamming distance, computed from the carried lanes, then makes the
+    * output exact.
     *
     * Hot-bucket bound (100 TB guard): a bucket holding more than
-    * `maxBucketSize` members (a degenerate corpus — 10^10 near-identical
-    * docs share one signature and would drive one bucket to ~10^9·10^9
-    * comparisons) is EXCLUDED from the pair join and surfaced as ONE
-    * deterministic marker row `a == b == min(member id),
-    * hamming = -bucketSize` — impossible for a real pair (a < b,
-    * hamming ≥ 0). Pairs the oversized bucket would have found usually
-    * survive via the pair's other bands; only the recall GUARANTEE is
-    * narrowed for marked buckets, visibly. */
-  def simHash128PairsFromSigs(sigs: DataFrame, maxHamming: Int,
-      maxBucketSize: Int = 10000): DataFrame = {
+    * `maxBucketSize` members (10^10 near-identical docs share one
+    * signature and would drive one bucket to ~10^9·10^9 comparisons) is
+    * left out of the pair join and surfaces as ONE deterministic marker
+    * row `a == b == min(member id), hamming = -bucketSize` — impossible
+    * for a real pair (a < b, hamming ≥ 0). Pairs the oversized bucket
+    * would have found usually survive via the pair's other bands; only the
+    * recall GUARANTEE is narrowed for marked buckets, visibly. */
+  private def simHashPairs(sigs: DataFrame, lanes: Seq[String], maxHamming: Int,
+      maxBucketSize: Int): DataFrame = {
+    val bits = 64 * lanes.size
     val bands = maxHamming + 1
-    val bounds = (0 to bands).map(b => b * 128 / bands)
-    // bits [lo, hi) of the (s2 ++ s1) 128-bit word, as one ≤58-bit slice
-    // per lane half; bucket key = (band, slice-of-s1, slice-of-s2)
-    def slice(lane: Column, laneLo: Int, lo: Int, hi: Int): Column = {
-      val l = math.max(lo, laneLo); val h = math.min(hi, laneLo + 64)
+    // the bits [lo, hi) of the signature that fall in lane i, right-aligned
+    // (0 when the slice misses the lane); a band's bucket key is its index
+    // plus one such piece per lane
+    def piece(i: Int, lo: Int, hi: Int): Column = {
+      val l = math.max(lo - 64 * i, 0); val h = math.min(hi - 64 * i, 64)
       if (l >= h) lit(0L)
       else {
-        val shifted = shiftrightunsigned(lane, l - laneLo)
-        if (h - l >= 64) shifted else shifted.bitwiseAND(lit((1L << (h - l)) - 1))
+        val shifted = shiftrightunsigned(col(lanes(i)), l)
+        if (h - l == 64) shifted else shifted.bitwiseAND(lit((1L << (h - l)) - 1))
       }
     }
-    val chunks = (0 until bands).map { c =>
-      struct(lit(c).as("band"),
-        slice(col("_s1"), 0, bounds(c), bounds(c + 1)).as("h1"),
-        slice(col("_s2"), 64, bounds(c), bounds(c + 1)).as("h2"))
+    val bandKeys = (0 until bands).map { b =>
+      val (lo, hi) = (b * bits / bands, (b + 1) * bits / bands)
+      lit(b) +: lanes.indices.map(piece(_, lo, hi))
     }
-    // bucket membership count via ONE window pass (shuffle on the bucket
-    // key both join branches need anyway); the window exchange is identical
-    // in the x and y branches, so ReuseExchange evaluates it once
-    val bucketKey = Seq(col("_band"), col("_h1"), col("_h2"))
-    val buckets = sigs
-      .select(col("_id"), col("_s1"), col("_s2"), explode(array(chunks: _*)).as("_b"))
-      .select(col("_id"), col("_s1"), col("_s2"),
-        col("_b.band").as("_band"), col("_b.h1").as("_h1"), col("_b.h2").as("_h2"))
-      .withColumn("_bn", count(lit(1)).over(Window.partitionBy(bucketKey: _*)))
-      .withColumn("_bmin", min(col("_id")).over(Window.partitionBy(bucketKey: _*)))
-    val ok = buckets.filter(col("_bn") <= maxBucketSize)
-    val pairs = ok.as("x").join(ok.as("y"),
-        col("x._band") === col("y._band") && col("x._h1") === col("y._h1") &&
-          col("x._h2") === col("y._h2") && col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"),
-        (bit_count(col("x._s1").bitwiseXOR(col("y._s1"))) +
-          bit_count(col("x._s2").bitwiseXOR(col("y._s2")))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-    val markers = buckets.filter(col("_bn") > maxBucketSize)
-      .select(col("_bmin").as("a"), col("_bmin").as("b"),
-        (-col("_bn")).cast("long").as("hamming"))
-      .distinct()
-    pairs.unionByName(markers)
+    val hamming = lanes.map(l => bit_count(col(s"x_$l").bitwiseXOR(col(s"y_$l")))).reduce(_ + _)
+    // a marker (a == b) always passes; the test reads pair columns only, so
+    // it runs before cappedBandPairs' merge aggregate, not after it
+    cappedBandPairs(sigs, col("_id"), bandKeys, maxBucketSize, carry = lanes)
+      .filter(col("a") === col("b") || hamming <= maxHamming)
+      .select(col("a"), col("b"), coalesce(-col("bucket"), hamming.cast("long")).as("hamming"))
   }
 
   /** SimHash near-duplicates at extreme scale: 128-bit signatures, banded
@@ -401,32 +403,14 @@ object DedupOps {
     docs.select(col(idCol).as("_id"),
       simhash64(TextOps.distinctTokens(col(textCol))).as("_sig"))
 
-  /** Banded pairing over precomputed 64-bit signatures: four 16-bit chunks
-    * (any pair within Hamming distance 3 shares ≥1 identical chunk —
-    * pigeonhole), verified with bit_count(a XOR b) ≤ maxHamming. Exposed
-    * separately so the signature table can be exported and the banding +
-    * verification re-checked externally (a SQL oracle can brute-force all
-    * pairs from the same signatures — any banding recall hole shows). */
-  def simHash64PairsFromSigs(sigs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val chunks = (0 until 4).map(c =>
-      struct(lit(c).as("band"), shiftright(col("_sig"), c * 16).bitwiseAND(lit(0xFFFFL)).as("h")))
-    val buckets = sigs.select(col("_id"), col("_sig"), explode(array(chunks: _*)).as("_b"))
-      .select(col("_id"), col("_sig"), col("_b.band").as("_band"), col("_b.h").as("_h"))
-    buckets.as("x").join(buckets.as("y"),
-        col("x._band") === col("y._band") && col("x._h") === col("y._h") &&
-          col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"),
-        bit_count(col("x._sig").bitwiseXOR(col("y._sig"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** SimHash near-duplicates: 64-bit fingerprints, banded + verified. Same
-    * Exchange barrier as the 128-bit variant: the interpreted signature
-    * lane is computed once and replayed from the reused shuffle, not
-    * inlined into both self-join branches. */
-  def simHashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): DataFrame =
-    simHash64PairsFromSigs(
-      simHash64Signatures(docs, idCol, textCol).repartition(col("_id")), maxHamming)
+  /** Banded pairing over precomputed 64-bit signatures (columns _id,
+    * _sig): the pigeonhole banding of [[simHashPairs]], `maxHamming + 1`
+    * slices of the 64 bits (four 16-bit chunks at the default d ≤ 3), with
+    * its hot-bucket cap. Exposed separately so the signature table can be
+    * exported and the banding + verification re-checked externally (a SQL
+    * oracle can brute-force all pairs from the same signatures — any
+    * banding recall hole shows). */
+  def simHash64PairsFromSigs(sigs: DataFrame, maxHamming: Int = 3,
+      maxBucketSize: Int = 10000): DataFrame =
+    simHashPairs(sigs, Seq("_sig"), maxHamming, maxBucketSize)
 }

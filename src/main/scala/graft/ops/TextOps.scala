@@ -20,10 +20,12 @@ object TextOps {
   def wordTokens(text: Column): Column = regexp_extract_all(text, lit("[A-Za-z]+"), lit(0))
 
   /** Word n-gram shingles, space-joined. Empty array when the document is
-    * shorter than n tokens (guards `sequence`'s descending-range behavior). */
+    * shorter than n tokens (guards `sequence`'s descending-range behavior).
+    * A 1-gram is its token, so n = 1 skips the per-token lambda. */
   def shingles(text: Column, n: Int): Column = {
     val arr = tokens(text)
-    when(size(arr) >= n,
+    if (n == 1) coalesce(arr, array().cast("array<string>"))
+    else when(size(arr) >= n,
       transform(sequence(lit(1), size(arr) - (n - 1)), i => array_join(slice(arr, i, lit(n)), " ")))
       .otherwise(array().cast("array<string>"))
   }

@@ -58,7 +58,7 @@ class OpsSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 20)
     val bf = AnnOps.bruteForceTopK(queries, emb, 5).select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = AnnOps.lshTopK(queries, emb, 5, dim = 64, p = 4, probeRadius = 2)
+    val lsh = AnnOps.lshTopK(queries, emb, 5, p = 4, probeRadius = 2)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (bf & lsh).size.toDouble / bf.size
@@ -85,7 +85,7 @@ class OpsSpec extends AnyFunSuite {
     val exact = AnnOps.exactNearDupPairs(clustered, 0.9)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.size == 20 * (10 * 9) / 2, s"fixture separation broke: ${exact.size}")
-    val banded = AnnOps.embeddingNearDupPairs(clustered, 0.9, dim)
+    val banded = AnnOps.embeddingNearDupPairs(clustered, 0.9)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(banded.subsetOf(exact))
     val ndRecall = (banded & exact).size.toDouble / exact.size
@@ -96,7 +96,7 @@ class OpsSpec extends AnyFunSuite {
     val bf = AnnOps.bruteForceTopK(queries, clustered, 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = AnnOps.lshTopK(queries, clustered, 5, dim, p = 4, probeRadius = 2)
+    val lsh = AnnOps.lshTopK(queries, clustered, 5, p = 4, probeRadius = 2)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val topkRecall = (bf & lsh).size.toDouble / bf.size
@@ -117,7 +117,7 @@ class OpsSpec extends AnyFunSuite {
   test("banded embedding near-dup pairs: no false positives, recall vs exact sweep") {
     val exact = AnnOps.exactNearDupPairs(emb, 0.4)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val banded = AnnOps.embeddingNearDupPairs(emb, 0.4, dim = 64)
+    val banded = AnnOps.embeddingNearDupPairs(emb, 0.4)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(banded.subsetOf(exact)) // cosine-verified candidates only
     val recall = if (exact.isEmpty) 1.0 else (banded & exact).size.toDouble / exact.size
@@ -161,6 +161,22 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(!found.contains((70L, 71L))) // d=7 > bound: excluded by the filter
     found.values.foreach(h => assert(h <= 6))
+
+    // the 64-bit pairing bands the same way: at maxHamming = 5, one flip in
+    // each of four fixed 16-bit chunks would share no bucket (d = 4, 5)
+    val rows64 = (0 to 6).flatMap { d =>
+      val b = Audio.splitmix64(3000L + d)
+      val flipped = (0 until d).foldLeft(b)((v, j) => v ^ (1L << (j * 64 / math.max(d, 1))))
+      Seq((10L * d, b), (10L * d + 1, flipped))
+    }
+    val found64 = DedupOps.simHash64PairsFromSigs(rows64.toDF("_id", "_sig"), maxHamming = 5)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+    (0 to 5).foreach { d =>
+      assert(found64.get((10L * d, 10L * d + 1)).contains(d.toLong),
+        s"planted 64-bit pair at hamming $d not found (got ${found64.get((10L * d, 10L * d + 1))})")
+    }
+    assert(!found64.contains((60L, 61L))) // d=6 > bound
+    found64.values.foreach(h => assert(h <= 5))
   }
 
   test("simhash128: oversized buckets are capped with a marker row, not quadratic pairs") {
@@ -182,6 +198,14 @@ class OpsSpec extends AnyFunSuite {
     assert(out.filter(v => v._1 == v._2).toSeq == Seq((0L, 0L, -500L)))
     // pairs outside the hot bucket are unaffected
     assert(out.filter(v => v._1 != v._2).toSet == Set((9000L, 9001L, 1L)))
+
+    // the 64-bit pairing carries the same cap
+    val sigs64 = ((0L until 500L).map(i => (i, h1)) ++ Seq((9000L, p1), (9001L, p1 ^ 1L)))
+      .toDF("_id", "_sig")
+    val out64 = DedupOps.simHash64PairsFromSigs(sigs64, maxHamming = 3, maxBucketSize = 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(out64.filter(v => v._1 == v._2).toSeq == Seq((0L, 0L, -500L)))
+    assert(out64.filter(v => v._1 != v._2).toSet == Set((9000L, 9001L, 1L)))
   }
 
   test("simhash near-dup pairing pins nothing in the cache manager") {
@@ -239,7 +263,7 @@ class OpsSpec extends AnyFunSuite {
     val neg = v.map(x => -x)
     val rows = (0L until 500L).map(i => (i, v)) ++ Seq((9000L, neg), (9001L, neg))
     val out = AnnOps.embeddingNearDupCandidates(rows.toDF("vec_id", "embedding"),
-        dim = 8, p = 4, bands = 8, maxBucketSize = 100)
+        p = 4, bands = 8, maxBucketSize = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.filter(p => p._1 == p._2).toSeq == Seq((0L, 0L)))
     assert(out.filter(p => p._1 != p._2).toSet == Set((9000L, 9001L)))
