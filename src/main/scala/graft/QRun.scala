@@ -7,7 +7,9 @@ import graft.engine.RunTrace
   * with -explain, and the RunTrace's per-job/stage breakdown with -jobs;
   * `-jobs q28_clips_verdicts` is the engine run's stage profile). The
   * corpus and its sketch exports are materialized once before the first
-  * draw, un-timed, as Bench and Verify do.
+  * draw, un-timed, as Bench and Verify do. Like Bench, a draw times the
+  * whole plan into Spark's `noop` sink; the row count is taken after it,
+  * un-timed.
   *
   * Usage: graft.QRun <sfDir> [-explain] [-jobs] q15_dedup_tokenset q16_ngram_jaccard ...
   */
@@ -26,12 +28,14 @@ object QRun {
       // (warm-JVM draws are otherwise memo reads and time nothing)
       if (name == "q28_clips_verdicts") SparkEntry.releaseReport(sfDir)
       val t0 = System.nanoTime()
-      val (n, trace) = RunTrace.capture(spark, out = out) {
+      val (df, trace) = RunTrace.capture(spark, out = out) {
         val df = fn(spark, sfDir)
         if (explain) df.explain("formatted")
-        df.count()
+        df.write.format("noop").mode("overwrite").save()
+        df
       }
       val w = (System.nanoTime() - t0) / 1e9
+      val n = df.count()
       println(f"[qrun] $name rows=$n wall=$w%.2fs jobs=${trace.jobs} stages=${trace.stages}")
     }
     spark.stop()

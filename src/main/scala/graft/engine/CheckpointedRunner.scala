@@ -100,8 +100,12 @@ final class CheckpointedRunner(store: SnapshotStore, outStore: SnapshotStore) {
   /** `cfg` for a run over clips snapshot `snapshotId`, with
     * `colocatedInputs` set when clustered storage (the Iceberg
     * bucket-partition emulation) co-locates the diff join: the pinned clips
-    * snapshot and the baseline must BOTH be clustered on `clip_id`, the
-    * join key, with the SAME bucket count. Co-located, the payload diff
+    * snapshot and the baseline must BOTH read bucketed on `clip_id`, the
+    * join key, with the SAME bucket count. A clustered snapshot reads
+    * bucketed only when its buckets reach `spark.sql.files.openCostInBytes`
+    * each (see [[SnapshotStore.read]]); a smaller one reads as a plain scan,
+    * because there one task per bucket costs more than the shuffle the
+    * co-location saves. Co-located, the payload diff
     * join never moves the multi-KB payloads; at 10^12 rows a shuffle would
     * re-move every one of them per run. Any other layout — a different
     * bucket count (e.g. changed between corpus generations) or another

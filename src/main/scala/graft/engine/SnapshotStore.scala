@@ -1,7 +1,11 @@
 package graft.engine
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Snapshot-versioned table store over Parquet directories.
@@ -24,6 +28,7 @@ import scala.jdk.CollectionConverters._
 class SnapshotStore(root: String) {
 
   private def tableDir(table: String) = Paths.get(root, table)
+  private def snapDir(table: String, id: Long) = tableDir(table).resolve(s"snap-$id")
   private def manifest(table: String) = tableDir(table).resolve("_snapshots")
   private def clusteringManifest(table: String) = tableDir(table).resolve("_clustering")
 
@@ -53,8 +58,9 @@ class SnapshotStore(root: String) {
 
   /** Append `df` hash-CLUSTERED by `key` into `numBuckets` bucket files,
     * each sorted by `key` — the emulation of an Iceberg `bucket(key, N)`
-    * partition spec. Reads of a clustered snapshot come back as a bucketed
-    * catalog table, so Catalyst plans equi-joins and aggregations on `key`
+    * partition spec. A read of a clustered snapshot whose buckets are worth
+    * a task each (see [[read]]) comes back as a bucketed catalog table, so
+    * Catalyst plans equi-joins and aggregations on `key`
     * between co-clustered snapshots with NO exchange (the storage-
     * partitioned-join a real Iceberg deployment gets from the same spec).
     * At 10^12 rows this is the difference between a diff join that
@@ -96,17 +102,50 @@ class SnapshotStore(root: String) {
   }
 
   /** The (key, numBuckets) clustering a [[read]] at `snapshot` comes back
-    * bucketed with — defined only when the read covers exactly one snapshot
-    * and that snapshot was clustered. Callers deciding whether TWO tables
-    * can join exchange-free must compare these specs, not just their
-    * presence: co-location requires the same key AND the same bucket count
-    * on both sides. */
-  def clusteringIfColocated(table: String, snapshot: Option[Long] = None): Option[(String, Int)] = {
+    * bucketed with — defined only when the read covers exactly one
+    * clustered snapshot AND its buckets are worth a task each (see
+    * [[read]]): a snapshot too small for that reads as a plain scan, which
+    * co-locates nothing. Callers deciding whether TWO tables can join
+    * exchange-free must compare these specs, not just their presence:
+    * co-location requires the same key AND the same bucket count on both
+    * sides. */
+  def clusteringIfColocated(table: String, snapshot: Option[Long] = None): Option[(String, Int)] =
+    clusteredSnapshot(table, snapshot).collect {
+      case (id, spec @ (_, n)) if worthBuckets(table, id, n) => spec
+    }
+
+  /** The snapshot ids a read at `snapshot` (default: current) covers. */
+  private def covered(table: String, snapshot: Option[Long]): Seq[Long] = {
     val ids = snapshots(table)
-    if (ids.isEmpty) return None
-    val upTo = snapshot.getOrElse(ids.last)
-    val covered = ids.filter(_ <= upTo)
-    if (covered.lengthCompare(1) == 0) clusteringOf(table, covered.head) else None
+    val upTo = snapshot.orElse(ids.lastOption).getOrElse(-1L)
+    ids.filter(_ <= upTo)
+  }
+
+  /** The one snapshot a read at `snapshot` covers and its (key,
+    * numBuckets), when the read covers exactly one snapshot and it was
+    * clustered. Multi-snapshot reads are a plain union (a Union's output
+    * partitioning is unknown to Catalyst anyway, so nothing is lost). */
+  private def clusteredSnapshot(table: String, snapshot: Option[Long]): Option[(Long, (String, Int))] =
+    covered(table, snapshot) match {
+      case Seq(id) => clusteringOf(table, id).map(id -> _)
+      case _ => None
+    }
+
+  /** Whether a clustered snapshot's buckets are worth a task each: its
+    * bytes on disk per bucket reach the active session's
+    * `spark.sql.files.openCostInBytes`. */
+  private def worthBuckets(table: String, id: Long, numBuckets: Int): Boolean =
+    dataFiles(snapDir(table, id)).map(Files.size).sum / numBuckets >=
+      SQLConf.get.filesOpenCostInBytes
+
+  /** The data files of a snapshot directory: Spark's readers skip names
+    * starting with `_` or `.` (`_SUCCESS`, checksums). */
+  private def dataFiles(dir: Path): Seq[Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.toSeq.sortBy(_.getFileName.toString).filterNot { f =>
+      val name = f.getFileName.toString
+      name.startsWith("_") || name.startsWith(".")
+    } finally ls.close()
   }
 
   private def claimSnapshot(table: String, tmp: java.nio.file.Path): Long = {
@@ -115,7 +154,7 @@ class SnapshotStore(root: String) {
     var attempts = 0
     while (!claimed) {
       try {
-        Files.move(tmp, tableDir(table).resolve(s"snap-$id"),
+        Files.move(tmp, snapDir(table, id),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         claimed = true
       } catch {
@@ -143,37 +182,51 @@ class SnapshotStore(root: String) {
   }
 
   /** Read the table as of `snapshot` (default: current). Append semantics:
-    * state at s = union of all appends ≤ s. */
+    * state at s = union of all appends ≤ s.
+    *
+    * A read that covers one clustered snapshot comes back from a catalog
+    * entry over its directory, and it comes back BUCKETED only when the
+    * snapshot's buckets are worth a task each: its bytes on disk divided by
+    * its bucket count reach `spark.sql.files.openCostInBytes` (4 MB by
+    * default), Spark's own measure of when a file is too small to deserve a
+    * task. A bucketed scan runs one task per bucket, and so does every
+    * stage that keeps its partitioning. With 64 buckets of ~720 KB (32k
+    * clips) a bulk validation pass ran 1120 tasks, and its 64-task pcm
+    * stages took 390–510 ms of wall time for 18–108 ms of executor CPU on
+    * 4 vCPUs. Below the cost the same catalog DDL without
+    * `CLUSTERED BY … INTO n BUCKETS` gives a plain scan, which Spark packs
+    * into splits of several files each: that pass then runs ~170 tasks and
+    * ends sooner, although its diff join now shuffles. At hundreds of MB
+    * per bucket the bucketed scan keeps the exchange-free co-located diff
+    * join. Both entries take their schema from the snapshot's Parquet
+    * footer, so a read starts no schema-inference job. */
   def read(spark: SparkSession, table: String, snapshot: Option[Long] = None): DataFrame = {
-    val ids = snapshots(table)
-    require(ids.nonEmpty, s"table $table has no snapshots")
-    val upTo = snapshot.getOrElse(ids.last)
-    val covered = ids.filter(_ <= upTo)
-    // Single clustered snapshot → bucketed catalog scan, so downstream
-    // equi-joins / aggregations on the cluster key plan without exchanges.
-    // Multi-snapshot reads fall back to the plain union (a Union's output
-    // partitioning is unknown to Catalyst anyway, so nothing is lost).
-    if (covered.lengthCompare(1) == 0) clusteringOf(table, covered.head) match {
-      case Some((key, n)) => return bucketedTable(spark, table, covered.head, key, n)
+    require(snapshots(table).nonEmpty, s"table $table has no snapshots")
+    clusteredSnapshot(table, snapshot) match {
+      case Some((id, (key, n))) =>
+        catalogRead(spark, table, id,
+          if (worthBuckets(table, id, n)) Some(s"CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS")
+          else None)
       case None =>
+        val dirs = covered(table, snapshot).map(i => snapDir(table, i).toString)
+        // mergeSchema: snapshots appended by different engine versions may
+        // carry different column sets (e.g. the lineage table gaining metric
+        // columns). Default parquet inference samples ONE file, so new columns
+        // could silently vanish on a mixed-era store; merged reads surface
+        // every column, with nulls where an old snapshot lacks it.
+        spark.read.option("mergeSchema", "true").parquet(dirs: _*)
     }
-    val dirs = covered.map(i => tableDir(table).resolve(s"snap-$i").toString)
-    // mergeSchema: snapshots appended by different engine versions may
-    // carry different column sets (e.g. the lineage table gaining metric
-    // columns). Default parquet inference samples ONE file, so new columns
-    // could silently vanish on a mixed-era store; merged reads surface
-    // every column, with nulls where an old snapshot lacks it.
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
-  /** Register (once per session) and return the bucketed external-table
-    * view of a clustered snapshot. The catalog entry is metadata-only —
-    * exactly what an Iceberg catalog would hand Spark for a
+  /** Register (once per session) and return the external-table view of a
+    * clustered snapshot: bucketed when `clustering` gives the
+    * `CLUSTERED BY` clause, plain otherwise. The catalog entry is
+    * metadata-only — exactly what an Iceberg catalog would hand Spark for a
     * `bucket(key, N)`-partitioned table — and its name is deterministic in
-    * (store root, table, snapshot) so repeated reads reuse it. */
-  private def bucketedTable(
-      spark: SparkSession, table: String, id: Long, key: String, n: Int): DataFrame = {
-    val dir = tableDir(table).resolve(s"snap-$id")
+    * (store root, table, snapshot, layout) so repeated reads reuse it. */
+  private def catalogRead(
+      spark: SparkSession, table: String, id: Long, clustering: Option[String]): DataFrame = {
+    val dir = snapDir(table, id)
     // catalog name keyed on a 128-bit digest of the FULL root path: the
     // former 32-bit String.hashCode could collide across the many store
     // roots one session sees (per-test temp dirs, warmup/out stores), and a
@@ -182,15 +235,26 @@ class SnapshotStore(root: String) {
     // on FIPS-mode JVMs).
     val rootDigest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(root.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
-    val name = s"graft_bk_${rootDigest}_" +
+    val name = s"graft_${if (clustering.isDefined) "bk" else "pl"}_${rootDigest}_" +
       s"${table.replaceAll("[^A-Za-z0-9_]", "_")}_$id"
     if (!spark.catalog.tableExists(name)) {
-      val schema = spark.read.parquet(dir.toString).schema
-      spark.sql(
-        s"CREATE TABLE IF NOT EXISTS $name (${schema.toDDL}) USING parquet " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS LOCATION '$dir'")
+      spark.sql(s"CREATE TABLE IF NOT EXISTS $name (${footerSchema(spark, dir).toDDL}) " +
+        s"USING parquet ${clustering.getOrElse("")} LOCATION '$dir'")
     }
     spark.table(name)
+  }
+
+  /** The schema Spark wrote into the footer of one of `dir`'s Parquet
+    * files, read on the driver. `spark.read.parquet(dir).schema` would run
+    * a Spark job to read the same footer. */
+  private def footerSchema(spark: SparkSession, dir: Path): StructType = {
+    val file = dataFiles(dir).head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+    // nullable, as Spark's own Parquet reads are
+    StructType(DataType.fromJson(json).asInstanceOf[StructType].map(_.copy(nullable = true)))
   }
 
   def exists(table: String): Boolean = Files.exists(manifest(table))

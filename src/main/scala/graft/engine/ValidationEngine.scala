@@ -13,16 +13,12 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
-/** Execution config. `saltBuckets` is the phase-1 salt width of the
-  * uniqueness key count ([[ValidationEngine.keyCounts]]), which spreads a
-  * hot key over that many reducers; `broadcastThresholdBytes` drives
-  * explicit broadcast-vs-shuffle join selection by estimated side size
-  * (north rule). The partition column is fixed (`codec`), the SNR
-  * threshold comes from the [[graft.rules.PcmEquality]] rule, and output
-  * frames are sized by Spark's own
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
+/** Execution config. `broadcastThresholdBytes` drives explicit
+  * broadcast-vs-shuffle join selection by estimated side size (north
+  * rule). The partition column is fixed (`codec`), the SNR threshold comes
+  * from the [[graft.rules.PcmEquality]] rule, and output frames are sized
+  * by Spark's own `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
 final case class EngineConfig(
-    saltBuckets: Int = 16,
     broadcastThresholdBytes: Long = 10L << 20,
     /** When true, the pcm_equality diff decodes and SNR-compares EVERY
       * matched row instead of short-circuiting byte-hash-equal pairs —
@@ -30,13 +26,17 @@ final case class EngineConfig(
       * like a production audio-validation profile. The default hash-first
       * path is bandwidth-bound and ~an order of magnitude cheaper. */
     fullDecodeVerify: Boolean = false,
-    /** When true, the clips/baseline/transcripts inputs are hash-clustered
-      * on clip_id into the same bucket layout (SnapshotStore.appendClustered
-      * — the Iceberg bucket-partition emulation), so the payload diff join
-      * must NOT be hinted to a shuffled hash join: an unhinted equi-join
-      * over co-bucketed sorted scans plans as a sort-merge join with no
-      * exchange and no sort — the multi-KB payloads never move. Set by
-      * CheckpointedRunner when the pinned snapshots report co-location. */
+    /** When true, the clips and baseline inputs READ as bucketed scans
+      * hash-clustered on clip_id into the same bucket layout
+      * (SnapshotStore.appendClustered — the Iceberg bucket-partition
+      * emulation), so the payload diff join must NOT be hinted to a
+      * shuffled hash join: an unhinted equi-join over co-bucketed sorted
+      * scans plans as a sort-merge join with no exchange and no sort — the
+      * multi-KB payloads never move. Set by CheckpointedRunner.configFor
+      * when both pinned snapshots report co-location, which
+      * SnapshotStore.read grants only to snapshots whose buckets reach
+      * `spark.sql.files.openCostInBytes` each: below that a bucket is not
+      * worth a task, and the store reads the snapshot as a plain scan. */
     colocatedInputs: Boolean = false)
 
 /** verdicts(partition_values, rule_id, pass, violation_count)
@@ -65,7 +65,7 @@ final case class ValidationReport(
   *      every stats rule (null rate, min/max, HLL distinct, KLL drift
   *      sketch) per partition — the analog of the reference's single pass
   *      over the batch;
-  *   3. uniqueness = salted two-phase count on the natural key (S5,
+  *   3. uniqueness = one partial-aggregated count on the natural key (S5,
   *      SourceSystemDataCheckerService.java:42-45);
   *   4. referential = left-anti joins both directions (J4);
   *   5. pcm_equality = left-outer diff join vs baseline + 3-way classify
@@ -106,11 +106,10 @@ object ValidationEngine {
     * instead of the multi-KB audio payload. All metadata rules (stats,
     * uniqueness, referential) run off this.
     *
-    * The `_fp1` fingerprint is KEPT on the output: it is a deterministic
-    * function of the FULL original row (payload lanes included), and so is
-    * the ideal uniqueness-salt source — spread even when a hot key's
-    * duplicates are metadata-identical, yet stable under task retry (see
-    * [[keyCounts]]). */
+    * The `_fp1` fingerprint stays on the output: a deterministic function
+    * of the FULL original row (payload lanes included), it is what the
+    * dedup's exchange spreads rows by, even when a hot key's rows are
+    * metadata-identical. */
   def dedupEventsMeta(clips: DataFrame): DataFrame = dedupHashedMeta(hashPayload(clips))
 
   /** The metadata dedup over a [[hashPayload]] frame: `dropDuplicates()`
@@ -228,42 +227,23 @@ object ValidationEngine {
     else element_at(
       map(pvOrdinals.toSeq.flatMap { case (pv, i) => Seq(lit(i), lit(pv)) }: _*), ord)
 
-  /** Per-key multiplicity + min partition ordinal in ONE salted two-phase
-    * aggregation (phase 1 spreads hot keys via the row-content salt; both
-    * aggregates are mergeable and fixed-width). Output: (_key, _n, _o) for
-    * EVERY key — the uniqueness rule filters _n > 1, and the bidirectional
-    * referential rule reuses the same rows as its child key set, so the two
-    * rules share one scan + shuffle instead of running three.
+  /** Per-key multiplicity + min partition ordinal in ONE aggregation on
+    * the key, behind one exchange. Output: (_key, _n, _o) for EVERY key —
+    * the uniqueness rule filters _n > 1, and the bidirectional referential
+    * rule reuses the same rows as its child key set, so the two rules share
+    * one scan + shuffle instead of running three. A NULL key is a group of
+    * its own, so duplicated NULL keys still surface.
     *
-    * Phase-1 salt requirements: (a) spread even when a hot key's duplicates
-    * are metadata-identical (a key-derived salt degenerates to one
-    * reducer), and (b) DETERMINISTIC per row — a row-random surrogate
-    * (monotonically_increasing_id) is re-evaluated on fetch-failure /
-    * cache-eviction retries and can route rows to different reducers than
-    * the original attempt, losing or double-counting per-(key,salt)
-    * partials. The full-row fingerprint `_fp1` (kept by [[dedupEventsMeta]])
-    * satisfies both: it covers the payload lanes (differs across post-dedup
-    * rows even when visible metadata is identical) and is a pure function of row
-    * content. Inputs without it fall back to hashing every visible column —
-    * still deterministic, spread whenever rows differ anywhere. A NULL key
-    * is a group of its own, so duplicated NULL keys still surface.
-    *
-    * Unlike [[statsPass]], this aggregation keeps its salt: on near-unique
-    * keys Spark may skip the map-side partial aggregation, and then the
-    * salt is what spreads a hot key's rows. */
+    * Like [[statsPass]], it needs no salt against a hot key: `count` and
+    * `min` have map-side partials, so each map task ships ONE partial row
+    * per key, however many rows the key has in that task. `cfg` is not
+    * read. */
   def keyCounts(events: DataFrame, keyCol: String, cfg: EngineConfig,
-      pvOrdinals: Map[String, Int]): DataFrame = {
-    val saltSrc: Column =
-      if (events.columns.contains("_fp1")) col("_fp1")
-      else xxhash64(events.columns.map(col): _*)
+      pvOrdinals: Map[String, Int]): DataFrame =
     events
-      .select(col(keyCol).as("_key"), pmod(saltSrc, lit(cfg.saltBuckets)).as("_salt"),
-        pvOrdinalCol(pvOrdinals).as("_o"))
-      .groupBy(col("_key"), col("_salt"))
-      .agg(count(lit(1)).as("_c"), min(col("_o")).as("_o"))
+      .select(col(keyCol).as("_key"), pvOrdinalCol(pvOrdinals).as("_o"))
       .groupBy(col("_key"))
-      .agg(sum("_c").as("_n"), min("_o").as("_o"))
-  }
+      .agg(count(lit(1)).as("_n"), min(col("_o")).as("_o"))
 
   /** Uniqueness violations off a precomputed [[keyCounts]] frame: no
     * attribution join — multiplicity and min-PV rode the aggregation. */

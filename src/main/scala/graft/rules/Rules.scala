@@ -32,9 +32,10 @@ final case class ApproxDistinct(column: String, minDistinct: Long = 1) extends R
   val ruleId = s"approx_distinct:$column"
 }
 
-/** `column` must be unique table-wide. Evaluated as a salted two-phase
-  * hash aggregate; each duplicated key yields one violation carrying the
-  * observed multiplicity. */
+/** `column` must be unique table-wide. Evaluated as one hash aggregate on
+  * the column, whose map-side partial folds a hot key to one row per map
+  * task; each duplicated key yields one violation carrying the observed
+  * multiplicity. */
 final case class Uniqueness(column: String) extends Rule {
   val ruleId = s"uniqueness:$column"
 }

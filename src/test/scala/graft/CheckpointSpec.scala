@@ -1,9 +1,11 @@
 package graft
 
-import graft.engine.{CheckpointedRunner, EngineConfig, SnapshotStore}
+import graft.engine.{CheckpointedRunner, EngineConfig, RunTrace, SnapshotStore}
 import graft.rules.Rule
 import graft.synth.ClipSynth
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -11,8 +13,22 @@ import scala.jdk.CollectionConverters._
 
 /** Resume/lineage semantics (reference analog: `last_checked` bookkeeping,
   * SpecimenRepository.java:35-40) and snapshot-store behavior. */
-class CheckpointSpec extends AnyFunSuite {
+class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
+
+  /** `body` with the session's `key` set to `value`, restored after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    try { spark.conf.set(key, value); body }
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body` with `spark.sql.files.openCostInBytes` lowered to 1 KB: a
+    * test-size clustered snapshot's buckets (hundreds of KB) then reach it,
+    * so the store reads the snapshot bucketed, as it reads one with
+    * hundreds of MB per bucket at the default 4 MB. */
+  private def withBucketedReads[T](body: => T): T =
+    withConf("spark.sql.files.openCostInBytes", "1k")(body)
 
   test("snapshot store: append-only snapshots, pinned reads") {
     import spark.implicits._
@@ -60,7 +76,7 @@ class CheckpointSpec extends AnyFunSuite {
     val snap = store.append("clips", ClipSynth.clips(spark, n).toDF())
 
     val runner = new CheckpointedRunner(store, out)
-    val lineage1 = runner.runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    val lineage1 = runner.runResumable(spark, snap, Rule.standardPack, EngineConfig())
     val pvs = lineage1.select("partition_values").collect().map(_.getString(0)).toSet
     assert(pvs == Set("codec=pcm_s16le", "codec=ulaw", "codec=alaw", "table=transcripts"))
 
@@ -78,7 +94,7 @@ class CheckpointSpec extends AnyFunSuite {
     assert(metricsRow.getLong(3) > 0, "executor_run_ms")
 
     // resume: everything checkpointed → no new work, no new output rows
-    val lineage2 = runner.runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    val lineage2 = runner.runResumable(spark, snap, Rule.standardPack, EngineConfig())
     assert(lineage2.count() == lineage1.count()) // same lineage table, no new rows for snapshot
     assert(out.read(spark, runner.ViolationsTable).count() == vioCount1)
     assert(out.snapshots(runner.ViolationsTable).size == 1) // no second append
@@ -99,11 +115,11 @@ class CheckpointSpec extends AnyFunSuite {
     val snap = store.append("clips", ClipSynth.clips(spark, n).toDF())
 
     val runner = new CheckpointedRunner(store, out)
-    val lineage1 = runner.runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    val lineage1 = runner.runResumable(spark, snap, Rule.standardPack, EngineConfig())
     // the orphan pseudo-partition is checkpointed even with ZERO violations
     assert(lineage1.filter(col("partition_values") === "table=transcripts").count() == 1)
     val vio1 = out.read(spark, runner.ViolationsTable).count()
-    runner.runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    runner.runResumable(spark, snap, Rule.standardPack, EngineConfig())
     assert(out.read(spark, runner.ViolationsTable).count() == vio1)
     assert(out.snapshots(runner.ViolationsTable).size == 1) // no second append
   }
@@ -118,7 +134,7 @@ class CheckpointSpec extends AnyFunSuite {
     store.append("transcripts", ClipSynth.transcripts(spark, n).toDF())
     val snap = store.append("clips", ClipSynth.clips(spark, n).toDF())
     val runner = new CheckpointedRunner(store, out)
-    runner.runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    runner.runResumable(spark, snap, Rule.standardPack, EngineConfig())
     val committed = runner.committedOutput(spark, runner.ViolationsTable).count()
     assert(committed > 0)
     // simulate a crash AFTER the violations append but BEFORE lineage:
@@ -151,7 +167,7 @@ class CheckpointSpec extends AnyFunSuite {
     // drift sketches ONLY, so a reused sketch ⇒ zero baseline reads
     val rules = Rule.standardPack.filterNot(_.isInstanceOf[graft.rules.PcmEquality])
     val runner = new CheckpointedRunner(store, out)
-    runner.runResumable(spark, snap1, rules, EngineConfig(saltBuckets = 4))
+    runner.runResumable(spark, snap1, rules, EngineConfig())
     assert(out.exists(runner.BaselineStatsTable), "first run must persist the sketches")
     def driftFails() = runner.committedOutput(spark, runner.VerdictsTable)
       .filter(col("rule_id") === "drift:dur_ms" && !col("pass"))
@@ -163,7 +179,7 @@ class CheckpointSpec extends AnyFunSuite {
     store.append("clips", ClipSynth.clips(spark, n).toDF()) // new snapshot → real work
     val snap2 = store.currentSnapshotId("clips").get
     store.reads.clear()
-    runner.runResumable(spark, snap2, rules, EngineConfig(saltBuckets = 4))
+    runner.runResumable(spark, snap2, rules, EngineConfig())
     assert(store.reads.getOrDefault("baseline_clips", 0) == 0,
       s"resumed run re-scanned the baseline: ${store.reads}")
     assert(out.snapshots(runner.BaselineStatsTable).size == 1, "no sketch re-append")
@@ -183,14 +199,14 @@ class CheckpointSpec extends AnyFunSuite {
     // first run does at scale, so it MUST land in this run's lineage
     val out1 = new SnapshotStore(s"$root/out1")
     val runner1 = new CheckpointedRunner(store, out1)
-    val lin1 = runner1.runResumable(spark, snap, rules, EngineConfig(saltBuckets = 4))
+    val lin1 = runner1.runResumable(spark, snap, rules, EngineConfig())
     // run 2: identical inputs/rules, but the out-store is pre-seeded with
     // run 1's sketches — the only plan difference is the absent baseline
     // scan, so the records_read delta isolates exactly that scan
     val out2 = new SnapshotStore(s"$root/out2")
     out2.append(runner1.BaselineStatsTable, out1.read(spark, runner1.BaselineStatsTable))
     val runner2 = new CheckpointedRunner(store, out2)
-    val lin2 = runner2.runResumable(spark, snap, rules, EngineConfig(saltBuckets = 4))
+    val lin2 = runner2.runResumable(spark, snap, rules, EngineConfig())
     val r1 = lin1.select("records_read").head().getLong(0)
     val r2 = lin2.select("records_read").head().getLong(0)
     val baseRows = store.read(spark, "baseline_clips").count()
@@ -214,11 +230,11 @@ class CheckpointSpec extends AnyFunSuite {
     val snap1 = store.append("clips", ClipSynth.clips(spark, n).toDF())
     val rules1 = Rule.standardPack.filterNot(_.isInstanceOf[graft.rules.PcmEquality])
     val runner = new CheckpointedRunner(store, out)
-    runner.runResumable(spark, snap1, rules1, EngineConfig(saltBuckets = 4))
+    runner.runResumable(spark, snap1, rules1, EngineConfig())
 
     val snap2 = store.append("clips", ClipSynth.clips(spark, n).toDF())
     val rules2 = rules1 :+ graft.rules.Drift("sr_hz", maxKs = 0.9)
-    runner.runResumable(spark, snap2, rules2, EngineConfig(saltBuckets = 4))
+    runner.runResumable(spark, snap2, rules2, EngineConfig())
     // the new rule's sketch column forced a second generation...
     assert(out.snapshots(runner.BaselineStatsTable).size == 2)
     // ...and drift evaluation read back exactly ONE sketch row per
@@ -278,9 +294,9 @@ class CheckpointSpec extends AnyFunSuite {
     val (smallR, smallSnap) = mkRunner(2000L)
     val (bigR, bigSnap) = mkRunner(20000L)
     val fSmall = Future(
-      smallR.runResumable(spark, smallSnap, Rule.standardPack, EngineConfig(saltBuckets = 4)))
+      smallR.runResumable(spark, smallSnap, Rule.standardPack, EngineConfig()))
     val fBig = Future(
-      bigR.runResumable(spark, bigSnap, Rule.standardPack, EngineConfig(saltBuckets = 4)))
+      bigR.runResumable(spark, bigSnap, Rule.standardPack, EngineConfig()))
     val (lSmall, lBig) = (Await.result(fSmall, 300.seconds), Await.result(fBig, 300.seconds))
     val small = lSmall.select("records_read", "tasks").head()
     val big = lBig.select("records_read", "tasks").head()
@@ -306,6 +322,10 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("clustered store: bucketed read-back, exchange-free co-located diff join") {
+    withBucketedReads(bucketedReadBack())
+  }
+
+  private def bucketedReadBack(): Unit = {
     val root = Files.createTempDirectory("graft-clustered").toString
     val store = new SnapshotStore(s"$root/state")
     val n = 3000L
@@ -327,11 +347,9 @@ class CheckpointSpec extends AnyFunSuite {
 
     // the full-decode diff join over co-located snapshots plans with NO
     // exchange: the storage layout already co-partitioned both sides
-    val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // at test scale Spark would auto-broadcast the tiny baseline; force
-      // the join shape a 10^12-row run gets (both sides too big to ship)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // at test scale Spark would auto-broadcast the tiny baseline; force
+    // the join shape a 10^12-row run gets (both sides too big to ship)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val joined = graft.engine.ValidationEngine.classifyAgainstBaseline(
         store.read(spark, "clips"), store.read(spark, "baseline_clips"),
         EngineConfig(fullDecodeVerify = true, colocatedInputs = true,
@@ -339,7 +357,7 @@ class CheckpointSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"co-located diff join must not shuffle:\n$plan")
       assert(joined.count() == store.read(spark, "clips").count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+    }
 
     // a second (plain) append demotes the table to the union read path
     import spark.implicits._
@@ -360,10 +378,39 @@ class CheckpointSpec extends AnyFunSuite {
       new CheckpointedRunner(store, new SnapshotStore(s"$root/out"))
         .configFor(snap, EngineConfig()).colocatedInputs
     }
-    assert(colocated("clip_id", 4))
-    // same (key, numBuckets) on both sides, but not the diff join's key
-    assert(!colocated("codec", 4))
-    assert(!colocated("clip_id", 8))
+    withBucketedReads {
+      assert(colocated("clip_id", 4))
+      // same (key, numBuckets) on both sides, but not the diff join's key
+      assert(!colocated("codec", 4))
+      assert(!colocated("clip_id", 8))
+    }
+    // at the default open cost these buckets are too small to read bucketed
+    assert(!colocated("clip_id", 4))
+  }
+
+  test("a clustered snapshot reads bucketed only when its buckets reach the open cost") {
+    val root = Files.createTempDirectory("graft-read-shape").toString
+    val store = new SnapshotStore(s"$root/state")
+    store.appendClustered("clips", ClipSynth.clips(spark, 2000).toDF(), "clip_id", 4)
+    // the scan under an aggregation on the bucket key, which a bucketed
+    // scan would serve without an exchange
+    def scan(df: DataFrame): FileSourceScanExec =
+      collect(df.groupBy("clip_id").count().queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s
+      }.head
+    // 2000 clips in 4 buckets: far below the default 4 MB per bucket
+    assert(store.clusteringIfColocated("clips").isEmpty)
+    val (plain, trace) = RunTrace.capture(spark, Some("read-shape")) { store.read(spark, "clips") }
+    assert(trace.jobs == 0, "a read infers no schema: it starts no job")
+    assert(!scan(plain).bucketedScan)
+    val bucketed = withBucketedReads {
+      assert(store.clusteringIfColocated("clips").contains(("clip_id", 4)))
+      val df = store.read(spark, "clips")
+      assert(scan(df).bucketedScan)
+      df
+    }
+    assert(plain.schema == bucketed.schema)
+    assert(plain.exceptAll(bucketed).isEmpty && bucketed.exceptAll(plain).isEmpty)
   }
 
   test("metadata dedup over a clustered store shuffles on its fingerprint, not the bucket layout") {
@@ -393,12 +440,10 @@ class CheckpointSpec extends AnyFunSuite {
     store.append("baseline_clips", if (emptyBaseline) base.limit(0) else base)
     store.append("transcripts", ClipSynth.transcripts(spark, n).toDF())
     val snap = store.append("clips", ClipSynth.clips(spark, n).toDF())
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, advisory)
+    withConf(key, advisory) {
       new CheckpointedRunner(store, new SnapshotStore(s"$root/out"))
-        .runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        .runResumable(spark, snap, Rule.standardPack, EngineConfig())
+    }
     s"$root/out"
   }
 
@@ -443,7 +488,8 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("runResumable: clustered corpus yields outcomes identical to unclustered") {
     val n = 2500L
-    def outputs(clustered: Boolean): (Seq[String], Seq[String]) = {
+    /** `colocated`: whether the run reads clips and baseline bucketed. */
+    def outputs(clustered: Boolean, colocated: Boolean): (Seq[String], Seq[String]) = {
       val root = Files.createTempDirectory(s"graft-coloc-$clustered").toString
       val store = new SnapshotStore(s"$root/state")
       val out = new SnapshotStore(s"$root/out")
@@ -453,8 +499,9 @@ class CheckpointSpec extends AnyFunSuite {
       put("transcripts", ClipSynth.transcripts(spark, n).toDF())
       val snap = put("clips", ClipSynth.clips(spark, n).toDF())
       val runner = new CheckpointedRunner(store, out)
+      assert(runner.configFor(snap, EngineConfig()).colocatedInputs == colocated)
       runner.runResumable(spark, snap, Rule.standardPack,
-        EngineConfig(saltBuckets = 4, fullDecodeVerify = true))
+        EngineConfig(fullDecodeVerify = true))
       // KLL quantile sketches are insertion-order-sensitive, so the KS
       // *estimate* legitimately wiggles in the 3rd decimal across storage
       // layouts (partitioning = insertion grouping); the drift verdict must
@@ -469,10 +516,11 @@ class CheckpointSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted.toSeq
       (v, g)
     }
-    val (vc, gc) = outputs(clustered = true)
-    val (vp, gp) = outputs(clustered = false)
-    assert(vc == vp, "violations must not depend on the storage layout")
-    assert(gc == gp, "verdicts must not depend on the storage layout")
+    val (vc, gc) = outputs(clustered = true, colocated = false)
+    val (vb, gb) = withBucketedReads(outputs(clustered = true, colocated = true))
+    val (vp, gp) = outputs(clustered = false, colocated = false)
+    assert(vc == vp && vb == vp, "violations must not depend on the storage layout")
+    assert(gc == gp && gb == gp, "verdicts must not depend on the storage layout")
     assert(vc.nonEmpty && gc.nonEmpty)
   }
 }

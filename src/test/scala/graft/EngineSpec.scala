@@ -3,10 +3,12 @@ package graft
 import graft.engine.{EngineConfig, ValidationEngine}
 import graft.rules._
 import graft.synth.ClipSynth
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestBase.spark
   private val N = 4000
 
@@ -16,7 +18,7 @@ class EngineSpec extends AnyFunSuite {
     val transcripts = ClipSynth.transcripts(spark, N).toDF()
     val baseline = ClipSynth.baseline(spark, N).toDF()
     ValidationEngine.run(spark, clips, transcripts, baseline, Rule.standardPack,
-      EngineConfig(saltBuckets = 4))
+      EngineConfig())
   }
   private lazy val violations = report.violations.collect()
     .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
@@ -110,7 +112,7 @@ class EngineSpec extends AnyFunSuite {
       .toDF("clip_id", "transcript", "dur_ms", "sr_hz", "codec")
       .withColumn("bytes", encode(col("transcript"), "UTF-8"))
     val rep = ValidationEngine.run(spark, df, df, df, Seq(Uniqueness("clip_id")),
-      EngineConfig(saltBuckets = 4))
+      EngineConfig())
     val out = rep.violations.collect().map(r => (Option(r.getString(0)), r.getString(2))).toSet
     val perPv = rep.verdicts.collect().map(r => r.getString(0) -> r.getLong(3)).toMap
     rep.unpersist()
@@ -138,8 +140,8 @@ class EngineSpec extends AnyFunSuite {
       rep.unpersist()
       (v, g)
     }
-    val (vFull, gFull) = outputs(EngineConfig(saltBuckets = 4, fullDecodeVerify = true))
-    val (vHash, gHash) = outputs(EngineConfig(saltBuckets = 4))
+    val (vFull, gFull) = outputs(EngineConfig(fullDecodeVerify = true))
+    val (vHash, gHash) = outputs(EngineConfig())
     assert(vFull == vHash)
     assert(gFull == gHash)
     assert(vHash.exists(_.contains("pcm_equality")) && gHash.nonEmpty)
@@ -147,7 +149,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("stats pass: one aggregation behind exactly one exchange, one row per partition") {
     val clips = ClipSynth.clips(spark, N).toDF()
-    val stats = ValidationEngine.statsPass(clips, Rule.standardPack, EngineConfig(saltBuckets = 4))
+    val stats = ValidationEngine.statsPass(clips, Rule.standardPack, EngineConfig())
     val plan = stats.queryExecution.executedPlan.toString
     assert("""\bExchange\b""".r.findAllIn(plan).size == 1, plan)
     assert(stats.columns.toSeq == Seq("codec", "n_rows", "nulls_sr_hz", "nulls_transcript",
@@ -166,9 +168,10 @@ class EngineSpec extends AnyFunSuite {
     import spark.implicits._
     // 10^4 events share ONE clip_id with IDENTICAL metadata, differing only
     // in payload bytes — the worst case for any key- or metadata-derived
-    // salt (all rows would land on one reducer). The fingerprint salt kept
-    // by dedupEventsMeta must (a) spread them ~uniformly and (b) be a pure
-    // function of row content, so task retries re-derive the same routing.
+    // spread (all rows would land on one reducer). The fingerprint the
+    // metadata dedup shuffles on, kept by dedupEventsMeta, must (a) spread
+    // them ~uniformly and (b) be a pure function of row content, so task
+    // retries re-derive the same routing.
     val hot = spark.range(10000).select(
       lit("hot").as("clip_id"),
       encode(concat(lit("payload-"), col("id").cast("string")), "UTF-8").as("bytes"),
@@ -193,6 +196,24 @@ class EngineSpec extends AnyFunSuite {
       .select(col("_fp1"), pmod(col("_fp1"), lit(buckets))).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m1 == m2)
+  }
+
+  test("key counts: a hot key reaches the count's reducer as one row per map task") {
+    // 4 map tasks of 1000 rows: in each, 500 rows share the key "hot" and
+    // 500 keys are unique
+    val tasks = 4
+    val events = spark.range(0, 4000, 1, tasks).select(
+      when(col("id") % 2 === 0, lit("hot")).otherwise(concat(lit("k"), col("id").cast("string")))
+        .as("clip_id"))
+    val kc = ValidationEngine.keyCounts(events, "clip_id", EngineConfig(), Map.empty)
+    val counts = kc.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts("hot") == 2000L && counts.size == 2001)
+    // one exchange, and it carries each unique key once plus the hot key's
+    // one map-side partial per task
+    val shuffled = collect(kc.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.metrics("shuffleRecordsWritten").value
+    }
+    assert(shuffled == Seq(2000L + tasks), shuffled)
   }
 
   test("dedup keeps exactly one row per group even under a nondeterministic upstream") {

@@ -107,7 +107,7 @@ class JobScopeSpec extends AnyFunSuite {
     // must not outlive the run, nor take the description with it
     asCaller(sc, "caller-desc", None) {
       val (_, seen) = jobLabels(sc) {
-        runner.runResumable(spark, snap, Rule.standardPack, EngineConfig(saltBuckets = 4))
+        runner.runResumable(spark, snap, Rule.standardPack, EngineConfig())
       }
       assert(labels(sc) == (("caller-desc", null, null)))
       val runGroups = seen.filter(j => j._1 != null && j._1.startsWith("graft:") &&
@@ -123,7 +123,7 @@ class JobScopeSpec extends AnyFunSuite {
       val (report, seen) = jobLabels(sc) {
         ValidationEngine.run(spark, ClipSynth.clips(spark, n).toDF(),
           ClipSynth.transcripts(spark, n).toDF(), ClipSynth.baseline(spark, n).toDF(),
-          Rule.standardPack, EngineConfig(saltBuckets = 4))
+          Rule.standardPack, EngineConfig())
       }
       try {
         assert(labels(sc) == (("caller-desc", "caller-group", "true")))
