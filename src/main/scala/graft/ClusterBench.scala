@@ -70,6 +70,10 @@ object ClusterBench {
     val n = args.drop(1).headOption.map(_.toLong).getOrElse(800000L)
     val workDir = args.drop(2).headOption.getOrElse("/dev/shm/graft-cluster")
     val profile = args.drop(3).headOption.getOrElse("full")
+    if (profile != "full" && profile != "fast") {
+      System.err.println(s"unknown profile '$profile': expected full or fast")
+      sys.exit(2)
+    }
     val memMb = args.drop(4).headOption.map(_.toInt).getOrElse(4096)
     val store = new SnapshotStore(s"$workDir/state")
 

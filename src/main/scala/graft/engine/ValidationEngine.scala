@@ -13,30 +13,30 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
-/** Execution config. `broadcastThresholdBytes` drives explicit
-  * broadcast-vs-shuffle join selection by estimated side size (north
-  * rule). The partition column is fixed (`codec`), the SNR threshold comes
-  * from the [[graft.rules.PcmEquality]] rule, and output frames are sized
-  * by Spark's own `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
+/** Execution config. Broadcast-vs-shuffle join selection reads Spark's
+  * own `spark.sql.autoBroadcastJoinThreshold` (see [[ValidationEngine.sizeAwareJoin]]),
+  * the partition column is fixed (`codec`), the SNR threshold comes from
+  * the [[graft.rules.PcmEquality]] rule, and output frames are sized by
+  * Spark's own `spark.sql.adaptive.advisoryPartitionSizeInBytes`. */
 final case class EngineConfig(
-    broadcastThresholdBytes: Long = 10L << 20,
     /** When true, the pcm_equality diff decodes and SNR-compares EVERY
-      * matched row instead of short-circuiting byte-hash-equal pairs —
-      * semantically identical (byte-equal ⇒ SNR=∞), but compute-weighted
-      * like a production audio-validation profile. The default hash-first
-      * path is bandwidth-bound and ~an order of magnitude cheaper. */
+      * matched row instead of passing byte-equal payloads without a decode
+      * — semantically identical (byte-equal ⇒ SNR=∞), but compute-weighted
+      * like a production audio-validation profile. The default path
+      * decodes only byte-different pairs. */
     fullDecodeVerify: Boolean = false,
     /** When true, the clips and baseline inputs READ as bucketed scans
       * hash-clustered on clip_id into the same bucket layout
       * (SnapshotStore.appendClustered — the Iceberg bucket-partition
-      * emulation), so the payload diff join must NOT be hinted to a
-      * shuffled hash join: an unhinted equi-join over co-bucketed sorted
-      * scans plans as a sort-merge join with no exchange and no sort — the
-      * multi-KB payloads never move. Set by CheckpointedRunner.configFor
-      * when both pinned snapshots report co-location, which
-      * SnapshotStore.read grants only to snapshots whose buckets reach
-      * `spark.sql.files.openCostInBytes` each: below that a bucket is not
-      * worth a task, and the store reads the snapshot as a plain scan. */
+      * emulation), so the payload diff join is left unhinted: an equi-join
+      * over co-bucketed sorted scans plans as a sort-merge join with no
+      * exchange and no sort that streams the sorted buckets, where a hash
+      * join would build a hash table over each bucket's payload rows. Set
+      * by CheckpointedRunner.configFor when both pinned snapshots report
+      * co-location, which SnapshotStore.read grants only to snapshots whose
+      * buckets reach `spark.sql.files.openCostInBytes` each: below that a
+      * bucket is not worth a task, and the store reads the snapshot as a
+      * plain scan. */
     colocatedInputs: Boolean = false)
 
 /** verdicts(partition_values, rule_id, pass, violation_count)
@@ -68,8 +68,9 @@ final case class ValidationReport(
   *   3. uniqueness = one partial-aggregated count on the natural key (S5,
   *      SourceSystemDataCheckerService.java:42-45);
   *   4. referential = left-anti joins both directions (J4);
-  *   5. pcm_equality = left-outer diff join vs baseline + 3-way classify
-  *      (J2/J3, SourceSystemDataCheckerService.java:116-154);
+  *   5. pcm_equality = ONE left-outer join of the payload rows against
+  *      the baseline's + 3-way classify, byte-equal payloads passing
+  *      without a decode (J2/J3, SourceSystemDataCheckerService.java:116-154);
   *   6. verdict/violation routing (A1) + per-partition lineage (W1), each
   *      output sized to one partition (so one file) per advisory partition
   *      size of its data.
@@ -97,38 +98,35 @@ object ValidationEngine {
     xxhash64(lit(4), col("bytes")).as(s"${prefix}2"))
 
   /** Every column but the payload, plus its `_h1`/`_h2` lanes: the narrow
-    * frame that both the diff join's cur side and the metadata dedup read. */
+    * frame the metadata dedup reads. */
   private def hashPayload(df: DataFrame): DataFrame =
     df.select(df.columns.filterNot(_ == "bytes").map(col).toSeq ++ payloadLanes("_h"): _*)
 
-  /** Metadata-only exact-duplicate removal (S4): [[dedupHashedMeta]] over
-    * the [[hashPayload]] projection, so the exchange carries ~40 bytes/row
-    * instead of the multi-KB audio payload. All metadata rules (stats,
-    * uniqueness, referential) run off this.
-    *
-    * The `_fp1` fingerprint stays on the output: a deterministic function
-    * of the FULL original row (payload lanes included), it is what the
-    * dedup's exchange spreads rows by, even when a hot key's rows are
-    * metadata-identical. */
-  def dedupEventsMeta(clips: DataFrame): DataFrame = dedupHashedMeta(hashPayload(clips))
-
-  /** The metadata dedup over a [[hashPayload]] frame: `dropDuplicates()`
-    * over EVERY column is an exact HashAggregate with no aggregate function
-    * (a subset key would add `first()` buffers over the string columns and
-    * fall back to SortAggregate), and over run()'s cached frame it reads no
-    * payload.
+  /** Metadata-only exact-duplicate removal (S4) over the [[hashPayload]]
+    * projection: the payload is read and hashed once, in the map stage, and
+    * the exchange carries ~40 bytes/row of lanes instead of the multi-KB
+    * audio payload. All metadata rules (stats, uniqueness, referential) run
+    * off this. `dropDuplicates()` over EVERY column is an exact
+    * HashAggregate with no aggregate function (a subset key would add
+    * `first()` buffers over the string columns and fall back to
+    * SortAggregate).
     *
     * The repartition on `_fp1` is the dedup's one shuffle. Without it, a
     * store bucketed on clip_id already satisfies the aggregate's
     * distribution, and its bucket count becomes the task count of every
     * metadata stage and output append downstream (64 buckets: about +30%
-    * wall, +50% CPU per 32k-clip pass on 4 vCPUs). `_fp1` spreads by
-    * whole-row content, so no shared key or payload makes a hot reducer. */
-  private def dedupHashedMeta(hm: DataFrame): DataFrame =
+    * wall, +50% CPU per 32k-clip pass on 4 vCPUs). `_fp1` is a
+    * deterministic function of the FULL original row (payload lanes
+    * included) and stays on the output: it spreads rows by whole-row
+    * content, so no shared key or payload makes a hot reducer, even when a
+    * hot key's rows are metadata-identical. */
+  def dedupEventsMeta(clips: DataFrame): DataFrame = {
+    val hm = hashPayload(clips)
     hm.withColumn("_fp1", xxhash64((lit(1) +: hm.columns.map(col).toSeq): _*))
       .repartition(col("_fp1"))
       .dropDuplicates()
       .drop("_h1", "_h2")
+  }
 
   /** The fused per-partition stats pass: ONE aggregation on the partition
     * column for ALL stats rules, one row per partition value with a column
@@ -159,7 +157,8 @@ object ValidationEngine {
   }
 
   /** Explicit broadcast-vs-shuffle selection by estimated build-side size
-    * (north rule; the reference always hash-builds in heap,
+    * against Spark's own `spark.sql.autoBroadcastJoinThreshold` (north rule;
+    * the reference always hash-builds in heap,
     * SourceSystemDataCheckerService.java:42-45 — here the choice is real).
     *
     * The shuffle path is HINTED to a shuffled hash join: Spark's default
@@ -171,15 +170,16 @@ object ValidationEngine {
     * once; partition counts sized so build chunks fit executor memory (the
     * same sizing any 100 TB deployment already does for AQE). */
   def sizeAwareJoin(left: DataFrame, right: DataFrame, usingKeys: Seq[String],
-      joinType: String, thresholdBytes: Long, colocated: Boolean = false): DataFrame = {
+      joinType: String, colocated: Boolean = false): DataFrame = {
     val rightSize = right.queryExecution.optimizedPlan.stats.sizeInBytes
     // Co-bucketed inputs: leave the join UNHINTED — Catalyst sees matching
     // HashPartitioning(key, n) on both bucketed scans and plans a
     // sort-merge join with no exchange (and, with trusted SORTED BY
-    // metadata, no sort). A shuffle_hash hint here would re-shuffle what
-    // the storage layout already co-located.
+    // metadata, no sort) that streams the sorted buckets. A shuffle_hash
+    // hint would plan no exchange either, but would build a hash table over
+    // each bucket's payload rows.
     val r =
-      if (rightSize <= thresholdBytes) broadcast(right)
+      if (rightSize <= SQLConf.get.autoBroadcastJoinThreshold) broadcast(right)
       else if (colocated) right
       else right.hint("shuffle_hash")
     left.join(r, usingKeys, joinType)
@@ -257,19 +257,19 @@ object ValidationEngine {
   /** Referential presence both directions via anti-joins (J4 analog).
     * `childKeys` lets the caller supply an already-aggregated distinct key
     * set (e.g. the uniqueness rule's [[keyCounts]]) for the orphan
-    * direction, avoiding a second full-events distinct. */
+    * direction, avoiding a second full-events distinct. `cfg` is not
+    * read. */
   def referentialViolations(events: DataFrame, parent: DataFrame, rule: Referential,
       cfg: EngineConfig, childKeys: Option[DataFrame] = None): Seq[DataFrame] = {
     val parentKeys = parent.select(col(rule.parentColumn).as(rule.childColumn)).distinct()
     val missing = sizeAwareJoin(events.select(col(rule.childColumn), pvCol.as(PV)),
-        parentKeys, Seq(rule.childColumn), "left_anti", cfg.broadcastThresholdBytes)
+        parentKeys, Seq(rule.childColumn), "left_anti")
       .select(col(rule.childColumn).as("clip_id"), lit(rule.ruleId).as("rule_id"),
         lit(s"no ${rule.parentTable} row").as("observed"), lit("present").as("expected"), col(PV))
     if (!rule.bidirectional) Seq(missing)
     else {
       val ck = childKeys.getOrElse(events.select(col(rule.childColumn)).distinct())
-      val orphans = sizeAwareJoin(parentKeys, ck, Seq(rule.childColumn),
-          "left_anti", cfg.broadcastThresholdBytes)
+      val orphans = sizeAwareJoin(parentKeys, ck, Seq(rule.childColumn), "left_anti")
         .select(col(rule.childColumn).as("clip_id"), lit(rule.ruleId).as("rule_id"),
           lit(s"orphan ${rule.parentTable} row").as("observed"),
           lit("clip present").as("expected"), lit(orphanPv(rule)).as(PV))
@@ -277,121 +277,48 @@ object ValidationEngine {
     }
   }
 
-  /** Baseline-side hash projection, exposed so run() can materialize it
-    * concurrently with the cur-side payload scan (the two scans are the
-    * pcm branch's serial head otherwise). */
-  private[engine] def baselineHashProjection(baseline: DataFrame): DataFrame =
-    baseline.select((col("clip_id") +: payloadLanes("_bh")) :+ col("transcript").as("_bt"): _*)
-
-  /** The core 3-way diff classify (J2/J3): left-outer join current events
-    * against the baseline snapshot on the natural key; absent ⇒ new,
-    * payload-different (PCM SNR < threshold OR transcript ≠) ⇒ changed,
-    * else unchanged. Only new/changed become violations — exactly the
-    * reference's routing.
+  /** The core 3-way diff classify (J2/J3): ONE left-outer join of the
+    * events' payload rows against the baseline's on the natural key — the
+    * reference's lookup of the stored value per key. No baseline row ⇒ new
+    * (a join marker, not payload nullness, says whether the row exists);
+    * transcript ≠ or payloads not "same" ⇒ changed; else unchanged. Only
+    * new/changed become violations — exactly the reference's routing.
     *
-    * Scale design: the diff join ships 128-bit payload *hashes*, not the
-    * multi-KB audio payloads — the wide shuffle shrinks ~50×. Hash-equal ⇒
-    * byte-equal ⇒ unchanged (the reference's byte-equality fast path).
-    * Only hash-mismatched rows ("suspects", typically ≪1%) pay the decode:
-    * a second, suspect-filtered join re-fetches both payloads and runs the
-    * SNR ≥ `rule.minSnrDb` allclose. AQE turns the suspect joins into
-    * broadcasts at runtime when the suspect set is small.
-    *
-    * Standalone, the threshold is the [[PcmEquality]] default; run() passes
-    * its rule and the shared hash frames to [[classify]], and keeps the
-    * `_h1`/`_h2` lanes that classify leaves on its hash-first output. */
-  def classifyAgainstBaseline(events: DataFrame, baseline: DataFrame, cfg: EngineConfig): DataFrame =
-    classify(events, baseline, cfg, PcmEquality(), identity, None, None).drop("_h1", "_h2")
-
-  private def classify(events: DataFrame, baseline: DataFrame, cfg: EngineConfig,
-      rule: PcmEquality, cacheHook: DataFrame => DataFrame,
-      hashedCur: Option[DataFrame], hashedBase: Option[DataFrame]): DataFrame = {
-    if (cfg.fullDecodeVerify) return classifyFullDecode(events, baseline, cfg, rule.minSnrDb)
-    // cur side: either the shared pre-hashed narrow frame (run() computes
-    // it in ONE payload scan that also feeds the metadata dedup), or an
-    // inline hash projection consumed exactly ONCE by the diff join.
-    // Suspect payloads are re-fetched from the raw tables below, not from
-    // here.
-    val cur = hashedCur.getOrElse(hashPayload(events))
-    val base = hashedBase.getOrElse(baselineHashProjection(baseline))
-    // `pre` — the widest shuffle in the system — is persisted (narrow:
-    // hashes only, no payload) so its consumers (suspect derivation and
-    // the final join) pay the exchange exactly ONCE.
-    val pre = cacheHook(
-      sizeAwareJoin(cur, base, Seq("clip_id"), "left_outer", cfg.broadcastThresholdBytes,
-          colocated = cfg.colocatedInputs)
-        .withColumn("_prelim",
-          when(col("_bh1").isNull, Outcome.New)
-            .when(!(col("transcript") <=> col("_bt")), Outcome.Changed)
-            .when(col("_h1") === col("_bh1") && col("_h2") === col("_bh2"), Outcome.Unchanged)
-            .otherwise(lit("_suspect"))))
-
-    // derived from the `pre` CACHE on each use — a filter over cached
-    // narrow rows; no own persist (one less materialization job) and no
-    // distinct (semi joins are duplicate-insensitive)
-    val suspectIds = pre.filter(col("_prelim") === "_suspect").select("clip_id")
-    // suspect payloads re-fetched and hashed AFTER the semi join: the diff
-    // lanes are recomputed for ~|suspects| rows only, instead of re-hashing
-    // every payload in the corpus a second time (the r3 plan's cost).
-    val curPay = events.select(col("clip_id"), col("codec"), col("bytes"))
-      .join(suspectIds, Seq("clip_id"), "left_semi")
-      .select(Seq(col("clip_id"), col("codec"), col("bytes")) ++ payloadLanes("_h"): _*)
-      .dropDuplicates("clip_id", "_h1", "_h2")
-    val basePay = baseline.select(col("clip_id"), col("bytes").as("_bb"))
-      .join(suspectIds, Seq("clip_id"), "left_semi")
-    val resolved = curPay.join(basePay, Seq("clip_id"))
-      .select(col("clip_id"), col("_h1"), col("_h2"),
-        pcm_allclose(col("codec"), col("_bb"), col("bytes"), rule.minSnrDb).as("_pcm_ok"))
-
-    val out = pre.join(resolved, Seq("clip_id", "_h1", "_h2"), "left_outer")
+    * "Same" is `pcm_allclose` (SNR ≥ `rule.minSnrDb`): byte-equal payloads
+    * pass without a decode (the reference's `Objects.equals` fast path),
+    * and only byte-different pairs are decoded. Under `cfg.fullDecodeVerify`
+    * every matched pair is decoded and SNR-compared. Where the predicate
+    * has no answer — a NULL payload or codec — byte equality decides, so
+    * two NULL payloads are the same and one NULL payload is a change. */
+  def classifyAgainstBaseline(events: DataFrame, baseline: DataFrame, cfg: EngineConfig,
+      rule: PcmEquality = PcmEquality()): DataFrame = {
+    val base = baseline.select(col("clip_id"),
+      col("bytes").as("_bb"), col("transcript").as("_bt"), lit(true).as("_present"))
+    val close =
+      if (cfg.fullDecodeVerify)
+        PcmFunctions.pcm_snr_db(col("codec"), col("_bb"), col("bytes")).geq(rule.minSnrDb)
+      else pcm_allclose(col("codec"), col("_bb"), col("bytes"), rule.minSnrDb)
+    val same = coalesce(close, col("bytes") <=> col("_bb"))
+    sizeAwareJoin(events, base, Seq("clip_id"), "left_outer", colocated = cfg.colocatedInputs)
       .withColumn("outcome",
-        when(col("_prelim") =!= "_suspect", col("_prelim"))
-          .when(col("_pcm_ok"), Outcome.Unchanged)
-          .otherwise(Outcome.Changed))
-    out.drop("_bh1", "_bh2", "_bt", "_prelim", "_pcm_ok")
+        when(col("_present").isNull, Outcome.New)
+          .when(!(col("transcript") <=> col("_bt")) || !same, Outcome.Changed)
+          .otherwise(Outcome.Unchanged))
+      .drop("_bb", "_bt", "_present")
   }
 
   /** PCM branch works on the RAW (un-deduped) clips: classifying an exact
     * duplicate yields an identical violation row, so dedup happens on the
-    * tiny violations output instead of paying a second full-payload shuffle
-    * before the diff join. The dedup key is the event's full identity —
-    * every metadata column plus its payload identity (the 128-bit hash
-    * lanes the diff already computed, or the bytes themselves in
-    * full-decode mode) — so no extra full-row fingerprint pass over the
-    * multi-KB payloads is needed (r3 hashed every payload twice more for
-    * exactly this dedup). */
+    * tiny violations output, keyed on the event's full identity (every raw
+    * column, payload included), instead of paying a second full-payload
+    * shuffle before the diff join. */
   private def pcmViolations(rawClips: DataFrame, baseline: DataFrame, rule: PcmEquality,
-      cfg: EngineConfig, cacheHook: DataFrame => DataFrame,
-      hashedCur: DataFrame, hashedBase: Option[DataFrame]): DataFrame = {
-    val metaCols = rawClips.columns.filterNot(_ == "bytes").toSeq
-    val dedupKey =
-      if (cfg.fullDecodeVerify) metaCols :+ "bytes"
-      else metaCols ++ Seq("_h1", "_h2")
-    classify(rawClips, baseline, cfg, rule, cacheHook, Some(hashedCur), hashedBase)
+      cfg: EngineConfig): DataFrame =
+    classifyAgainstBaseline(rawClips, baseline, cfg, rule)
       .filter(col("outcome") =!= Outcome.Unchanged)
-      .dropDuplicates(dedupKey)
+      .dropDuplicates(rawClips.columns.toSeq)
       .select(col("clip_id"), lit(rule.ruleId).as("rule_id"),
         col("outcome").as("observed"), lit(Outcome.Unchanged).as("expected"), pvCol.as(PV))
-  }
-
-  /** Full-decode classify: the payloads ride the join and every matched row
-    * runs decode + SNR (the north rule's per-row invariant evaluated
-    * literally). Used when `cfg.fullDecodeVerify` — compute-weighted, so it
-    * scales with cores where the hash-first path saturates memory
-    * bandwidth. */
-  private def classifyFullDecode(events: DataFrame, baseline: DataFrame,
-      cfg: EngineConfig, minSnrDb: Double): DataFrame = {
-    val base = baseline.select(col("clip_id"),
-      col("bytes").as("_bb"), col("transcript").as("_bt"))
-    sizeAwareJoin(events, base, Seq("clip_id"), "left_outer", cfg.broadcastThresholdBytes,
-        colocated = cfg.colocatedInputs)
-      .withColumn("outcome",
-        when(col("_bb").isNull, Outcome.New)
-          .when(!PcmFunctions.pcm_snr_db(col("codec"), col("_bb"), col("bytes"))
-            .geq(minSnrDb) || !(col("transcript") <=> col("_bt")), Outcome.Changed)
-          .otherwise(Outcome.Unchanged))
-      .drop("_bb", "_bt")
-  }
 
   /** Kolmogorov–Smirnov distance between two DataSketches `KllDoublesSketch`
     * images — what Spark's `kll_sketch_agg_double` emits and what older runs
@@ -459,27 +386,6 @@ object ValidationEngine {
     val extraCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val cacheHook: DataFrame => DataFrame = df => { val p = df.persist(); extraCaches += p; p }
 
-    // ---- ONE payload scan for the whole run (hash-first mode): the
-    // 128-bit payload-hash lanes computed here feed BOTH the pcm diff
-    // join's cur side and the metadata dedup, which previously
-    // each scanned + hashed every multi-KB payload themselves — the single
-    // heaviest duplicated work in the run. Materialized SYNCHRONOUSLY
-    // (one count job) before the branch fan-out: the pcm future and the
-    // meta chain would otherwise race the cold cache and both compute the
-    // scan. In full-decode mode the pcm branch reads the raw payloads, so
-    // the dedup is the frame's only reader and it stays uncached.
-    val payloadHash: DataFrame =
-      if (cfg.fullDecodeVerify) hashPayload(clips) else cacheHook(hashPayload(clips))
-    // the baseline-side hash projection is narrow too (clip_id + 2 hash
-    // lanes + transcript) — persist it and scan it CONCURRENTLY with the
-    // cur-side scan below: the two payload scans were the pcm branch's
-    // serial head (~the two most expensive stages of the run, back to back).
-    // Built ONLY when a pcm rule exists: `baseline` is by-name precisely so
-    // a run with stored drift sketches and no pcm rule never reads it.
-    val hashedBase: Option[DataFrame] =
-      if (cfg.fullDecodeVerify || !rules.exists(_.isInstanceOf[PcmEquality])) None
-      else Some(cacheHook(baselineHashProjection(baselineDf)))
-
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     // the job group does not cross into pooled threads on its own — scopes
@@ -487,25 +393,16 @@ object ValidationEngine {
     // still see the pooled jobs
     val sc = spark.sparkContext
     val jobGroup = JobScope.group(sc)
-    // both single-scan materializations run in parallel (baseline on a
-    // pooled thread, clips on this one) BEFORE the branch fan-out: the pcm
-    // future and the meta chain would otherwise race the cold caches and
-    // compute the scans twice
-    val baseScanF: Future[Unit] = hashedBase match {
-      case None => Future.successful(())
-      case Some(b) => Future { JobScope(sc, "baseline-hash-scan", jobGroup) { b.count(); () } }
-    }
-    if (!cfg.fullDecodeVerify) JobScope(sc, "payload-hash-scan") { payloadHash.count() }
 
-    // ---- the pcm branch reads ONLY the shared payload-hash frames (or, in
-    // full-decode mode, the raw clips) + baseline tables — nothing it needs
-    // waits on the dedup/stats caches — so its (dominant) evaluation is
-    // launched concurrently below while this thread populates the metadata
-    // caches and evaluates the metadata branches: branch-level pipelining
-    // that hides the whole metadata chain behind the payload diff join.
+    // ---- the pcm branch reads ONLY the raw clips + baseline tables —
+    // nothing it needs waits on the dedup/stats caches — so its (dominant)
+    // evaluation is launched concurrently below while this thread populates
+    // the metadata caches and evaluates the metadata branches: branch-level
+    // pipelining that hides the whole metadata chain behind the payload
+    // diff join. `baseline` is by-name so a run with stored drift sketches
+    // and no pcm rule never reads it.
     val pcmBranches: Seq[DataFrame] =
-      rules.collect { case p: PcmEquality =>
-        pcmViolations(clips, baselineDf, p, cfg, cacheHook, payloadHash, hashedBase) }
+      rules.collect { case p: PcmEquality => pcmViolations(clips, baselineDf, p, cfg) }
     val pcmUnion = pcmBranches.reduceOption(_ unionByName _).map(df => df.persist())
     def branchCounts(df: DataFrame): Map[(String, String), Long] = df
       .groupBy(col(PV), col("rule_id")).agg(count(lit(1)).as("violation_count"))
@@ -513,15 +410,10 @@ object ValidationEngine {
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val pcmCountsF: Future[Map[(String, String), Long]] = pcmUnion match {
       case None => Future.successful(Map.empty)
-      case Some(u) => Future {
-        // the baseline-hash cache must be fully populated before any action
-        // touches plans containing it (cold-cache race, as above)
-        Await.result(baseScanF, scala.concurrent.duration.Duration.Inf)
-        JobScope(sc, "pcm-counts", jobGroup) { branchCounts(u) }
-      }
+      case Some(u) => Future { JobScope(sc, "pcm-counts", jobGroup) { branchCounts(u) } }
     }
 
-    val eventsMeta = dedupHashedMeta(payloadHash).persist()
+    val eventsMeta = dedupEventsMeta(clips).persist()
 
     val stats = statsPass(eventsMeta, rules, cfg).persist() // rows = #partitions (tiny)
     // Materialize the stats pass FIRST: this single job populates BOTH the

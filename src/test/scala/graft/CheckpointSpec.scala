@@ -6,6 +6,8 @@ import graft.synth.ClipSynth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -345,18 +347,20 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         .collect().map(_.toString).sorted.toSeq
     assert(canon(store.read(spark, "clips")) == canon(plain.read(spark, "clips")))
 
-    // the full-decode diff join over co-located snapshots plans with NO
-    // exchange: the storage layout already co-partitioned both sides
+    // the diff join over co-located snapshots plans with NO exchange in
+    // either mode: the storage layout already co-partitioned both sides
     // at test scale Spark would auto-broadcast the tiny baseline; force
     // the join shape a 10^12-row run gets (both sides too big to ship)
     withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val joined = graft.engine.ValidationEngine.classifyAgainstBaseline(
-        store.read(spark, "clips"), store.read(spark, "baseline_clips"),
-        EngineConfig(fullDecodeVerify = true, colocatedInputs = true,
-          broadcastThresholdBytes = 1))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"co-located diff join must not shuffle:\n$plan")
-      assert(joined.count() == store.read(spark, "clips").count())
+      for (fullDecode <- Seq(false, true)) {
+        val joined = graft.engine.ValidationEngine.classifyAgainstBaseline(
+          store.read(spark, "clips"), store.read(spark, "baseline_clips"),
+          EngineConfig(fullDecodeVerify = fullDecode, colocatedInputs = true))
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"),
+          s"co-located diff join (fullDecodeVerify = $fullDecode) must not shuffle:\n$plan")
+        assert(joined.count() == store.read(spark, "clips").count())
+      }
     }
 
     // a second (plain) append demotes the table to the union read path
@@ -366,6 +370,22 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .toDF("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"))
     assert(store.clusteringIfColocated("clips").isEmpty)
     assert(store.read(spark, "clips").count() == before + 1)
+  }
+
+  test("the diff over plain snapshots is one join behind two exchanges") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-plain-diff").toString)
+    store.append("baseline_clips", ClipSynth.baseline(spark, 2000).toDF())
+    store.append("clips", ClipSynth.clips(spark, 2000).toDF())
+    // broadcast off: the join shape of inputs too big to ship
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      for (fullDecode <- Seq(false, true)) {
+        val plan = graft.engine.ValidationEngine.classifyAgainstBaseline(
+          store.read(spark, "clips"), store.read(spark, "baseline_clips"),
+          EngineConfig(fullDecodeVerify = fullDecode)).queryExecution.executedPlan
+        assert(collect(plan) { case j: BaseJoinExec => j }.size == 1, plan)
+        assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 2, plan)
+      }
+    }
   }
 
   test("co-location needs both tables clustered on clip_id with one bucket count") {

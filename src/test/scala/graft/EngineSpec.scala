@@ -101,6 +101,28 @@ class EngineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       outcomes(EngineConfig(fullDecodeVerify = false)))
   }
 
+  test("a baseline row is present by its join marker; NULL payloads classify alike in both modes") {
+    import spark.implicits._
+    val (x, y) = (Array[Byte](1, 2, 3, 4), Array[Byte](9, 9, 9, 9))
+    def rows(r: (String, Array[Byte], String)*) =
+      r.toDF("clip_id", "bytes", "codec").withColumn("transcript", lit("t"))
+    val events = rows(("base_null", x, "pcm_s16le"), ("event_null", null, "pcm_s16le"),
+      ("both_null", null, "pcm_s16le"), ("absent", x, "pcm_s16le"),
+      ("equal", x, "pcm_s16le"), ("codec_null", x, null))
+    val baseline = rows(("base_null", null, "pcm_s16le"), ("event_null", x, "pcm_s16le"),
+      ("both_null", null, "pcm_s16le"), ("equal", x, "pcm_s16le"), ("codec_null", y, null))
+    // a payload that cannot be decoded is compared by its bytes
+    val want = Map("base_null" -> "changed", "event_null" -> "changed",
+      "both_null" -> "unchanged", "absent" -> "new", "equal" -> "unchanged",
+      "codec_null" -> "changed")
+    for (fullDecode <- Seq(false, true)) {
+      val got = ValidationEngine
+        .classifyAgainstBaseline(events, baseline, EngineConfig(fullDecodeVerify = fullDecode))
+        .collect().map(r => r.getAs[String]("clip_id") -> r.getAs[String]("outcome")).toMap
+      assert(got == want, s"fullDecodeVerify = $fullDecode")
+    }
+  }
+
   test("uniqueness: duplicated NULL keys still surface (null-safe attribution join)") {
     import spark.implicits._
     val df = Seq(

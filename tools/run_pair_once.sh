@@ -6,10 +6,10 @@
 # pass, per-pass steal + standard-candle counters in the JSON.
 # Usage: tools/run_pair_once.sh <W_hi> <W_lo> <out.jsonl> [nRows] [workDir] [-Dspark.k=v ...]
 # PROFILE picks the engine profile: full (full-decode verify; this
-# script's default) or hash (hash-first, the engine's own default path,
-# bandwidth-bound); PASSES sets the passes per cell. The hash-profile 1v4
-# pair at 19.2M rows:
-#   PROFILE=hash PASSES=3 tools/run_pair_once.sh 4 1 out.jsonl 19200000 /dev/shm/graft-c19200k
+# script's default) or fast (the engine's own default path: byte-equal
+# payloads pass without a decode); PASSES sets the passes per cell. The
+# fast-profile 1v4 pair at 19.2M rows:
+#   PROFILE=fast PASSES=3 tools/run_pair_once.sh 4 1 out.jsonl 19200000 /dev/shm/graft-c19200k
 # Arguments after workDir are extra session confs, -Dspark.k=v launch
 # settings put on the java line (they win over ClusterBench's own), e.g.
 #   tools/run_pair_once.sh 4 1 out.jsonl 6400000 /dev/shm/graft-c6400k -Dspark.sql.adaptive.enabled=false
